@@ -352,18 +352,7 @@ def main() -> None:
         except (OSError, json.JSONDecodeError):
             old_anchor = None
         if old_anchor and old_anchor.get("sf_dir", "").rstrip("/") == sf_dir.rstrip("/"):
-            tot_s = round(
-                sum(s for n, s in times.items() if old_anchor["queries"].get(n)), 3
-            )
-            tot_d = round(
-                sum(d for n, d in old_anchor["queries"].items() if n in times), 3
-            )
-            out["vs_duckdb_r11_anchor"] = {
-                "n_compared": sum(1 for n in times if old_anchor["queries"].get(n)),
-                "total_spark_sec": tot_s,
-                "total_duckdb_sec": tot_d,
-                "aggregate_ratio": round(tot_s / tot_d, 3) if tot_d else None,
-            }
+            out["vs_duckdb_r11_anchor"] = anchor_totals(times, old_anchor["queries"])
     # The driver's BENCH_r{N}.json keeps only a 2000-char tail of stdout
     # and parses a JSON line out of it: rounds 1-3 (line <= ~1 kB) have
     # `parsed` populated, rounds 4-8 (per-query table pushed the line
@@ -380,6 +369,26 @@ def main() -> None:
     except OSError:
         pass
     print(json.dumps(compact_line(out, os.path.basename(self_path))))
+
+
+def anchor_totals(times: dict[str, float], anchor: dict) -> dict:
+    """Spark and DuckDB totals over ONE set of compared queries: those
+    timed here whose anchor entry is a positive number. A 0.0 or null
+    anchor entry is left out of both sums, so it can neither skew the
+    ratio nor break the sum."""
+    compared = [
+        n
+        for n in times
+        if isinstance(anchor.get(n), (int, float)) and anchor[n] > 0
+    ]
+    tot_s = round(sum(times[n] for n in compared), 3)
+    tot_d = round(sum(anchor[n] for n in compared), 3)
+    return {
+        "n_compared": len(compared),
+        "total_spark_sec": tot_s,
+        "total_duckdb_sec": tot_d,
+        "aggregate_ratio": round(tot_s / tot_d, 3) if tot_d else None,
+    }
 
 
 def compact_line(out: dict, self_name: str, budget: int = 1800) -> dict:

@@ -11,8 +11,6 @@ are reproducible and oracle-checkable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
@@ -30,12 +28,7 @@ def _persist_prefix_input(df: DataFrame) -> DataFrame:
     3x). Caching the narrow input makes the sample read the cache and
     costs one pass + a cache of the already-projected rows — the callers
     all project down to (order cols, value col) before calling, so the
-    cached bytes are a small fraction of their raw input at any scale.
-
-    `SPARK_GRAFT_PREFIXSUM_INPUT_PERSIST=0` restores the uncached
-    behavior (A/B probe switch; default on)."""
-    if os.environ.get("SPARK_GRAFT_PREFIXSUM_INPUT_PERSIST", "1") == "0":
-        return df
+    cached bytes are a small fraction of their raw input at any scale."""
     return df.persist()
 
 
@@ -56,24 +49,7 @@ def _local_row_number(with_pid: DataFrame, out_col: str) -> DataFrame:
     more than 2^33 (~8.6e9) rows would silently wrap the local index.
     Callers size partitions via `num_partitions`/defaultParallelism;
     keeping partitions under ~10^9 rows (they must, to sort in memory
-    at all) keeps 2^33 unreachable by orders of magnitude.
-
-    `SPARK_GRAFT_JVM_LOCAL_RN=0` restores the mapInPandas numbering
-    (A/B probe switch; default on)."""
-    if os.environ.get("SPARK_GRAFT_JVM_LOCAL_RN", "1") == "0":
-        out_schema = StructType(
-            with_pid.schema.fields + [StructField(out_col, LongType(), False)]
-        )
-
-        def attach_local_rn(batches):
-            seen = 0
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf[out_col] = range(seen + 1, seen + 1 + len(pdf))
-                seen += len(pdf)
-                yield pdf
-
-        return with_pid.mapInPandas(attach_local_rn, schema=out_schema)
+    at all) keeps 2^33 unreachable by orders of magnitude."""
     return with_pid.withColumn(
         out_col,
         (F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)) + 1)
@@ -165,8 +141,9 @@ def row_range_shard_scalable(
 
     1. `repartitionByRange` on the order columns (sampled bounds — the
        parallel sort) + `sortWithinPartitions`.
-    2. One Arrow `mapInPandas` pass attaches a per-partition local row
-       number — narrow, order-preserving, no shuffle.
+    2. A JVM projection (:func:`_local_row_number`) attaches a
+       per-partition local row number — narrow, order-preserving, no
+       shuffle.
     3. Per-partition row counts (tiny: one row per partition) turn into
        cumulative offsets with a window over that P-row relation —
        global, but over ~hundreds of rows, the benign pct-of-total

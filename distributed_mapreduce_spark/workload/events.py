@@ -621,6 +621,22 @@ def q_latest_event_per_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (before: 2, one per partial/final — see plans/r13/)."""
     ev = table(spark, sf_dir, "events")
     packed = F.expr("CAST(unix_micros(ts) AS DECIMAL(38,0)) * 100000000000 + event_id")
+    # Loud data contract: outside these bounds the packed order is no
+    # longer (ts, event_id) order, so a violating row fails the query
+    # instead of returning a wrong row. Evaluated inside the aggregate's
+    # projection — no extra job. A null passes through as before.
+    out_of_range = F.expr(
+        "event_id < 0 OR event_id >= 100000000000 OR unix_micros(ts) < 0"
+    )
+    packed = F.when(
+        out_of_range,
+        F.raise_error(
+            F.lit(
+                "latest_event_per_user_agg: packing contract violated "
+                "(needs 0 <= event_id < 10^11 and ts >= 1970-01-01)"
+            )
+        ),
+    ).otherwise(packed)
     agg1 = ev.groupBy("user_id", "event_type").agg(F.max(packed).alias("p"))
     win = Window.partitionBy("user_id")
     best = agg1.withColumn("mp", F.max("p").over(win)).filter(

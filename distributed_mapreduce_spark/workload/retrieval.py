@@ -70,6 +70,9 @@ BM25_QUERIES: dict[int, tuple[str, ...]] = {
 BM25_TOP_K = 10
 #: Salt fan-out of the two-stage top-k (stage-2 input ≤ salts·k rows).
 TOPK_SALTS = 8
+#: Documents parquet size above which BM25 persists its doc-grain
+#: relation (rationale in `_bm25_relations`).
+BM25_PERSIST_BYTES = 256 << 20
 
 #: Reciprocal-rank fusion: pool depth per ranked list, the standard
 #: k=60 damping constant, fused cutoff, and the anchor query.
@@ -111,20 +114,11 @@ def _two_stage_topk(
 
 
 def _bm25_persist_corpus(docs: DataFrame) -> bool:
-    """Adaptive persist decision for the BM25 doc-grain relation.
-
-    Explicit ``SPARK_GRAFT_BM25_TF_PERSIST=0/1`` forces the branch;
-    otherwise persist iff the corpus parquet bytes (driver-side file
-    metadata — no job) exceed ``SPARK_GRAFT_BM25_TF_PERSIST_BYTES``
-    (default 256 MiB). Rationale in `_bm25_relations`."""
+    """Adaptive persist decision for the BM25 doc-grain relation:
+    persist iff the corpus parquet bytes (driver-side file metadata — no
+    job) reach ``BM25_PERSIST_BYTES``. Rationale in `_bm25_relations`."""
     import os
 
-    forced = os.environ.get("SPARK_GRAFT_BM25_TF_PERSIST")
-    if forced is not None and forced != "":
-        return forced == "1"
-    threshold = int(
-        os.environ.get("SPARK_GRAFT_BM25_TF_PERSIST_BYTES", str(256 << 20))
-    )
     total = 0
     for uri in docs.inputFiles():
         path = uri[7:] if uri.startswith("file://") else uri
@@ -132,9 +126,9 @@ def _bm25_persist_corpus(docs: DataFrame) -> bool:
             total += os.path.getsize(path)
         except OSError:
             return False  # non-local source: stay conservative
-        if total >= threshold:
+        if total >= BM25_PERSIST_BYTES:
             return True
-    return total >= threshold
+    return total >= BM25_PERSIST_BYTES
 
 
 def _bm25_relations(
@@ -177,8 +171,7 @@ def _bm25_relations(
     # than any cache), but at scale the repeated tokenize passes (3
     # per scored action, 4 for ltr) dominate the tiny cache write.
     # Decision: persist when the documents parquet exceeds
-    # SPARK_GRAFT_BM25_TF_PERSIST_BYTES (default 256 MiB). Explicit
-    # SPARK_GRAFT_BM25_TF_PERSIST=0/1 still forces either branch.
+    # BM25_PERSIST_BYTES (256 MiB).
     if _bm25_persist_corpus(docs):
         docterms = tokd.select(
             "doc_id",

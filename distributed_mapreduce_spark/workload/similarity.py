@@ -222,19 +222,7 @@ def near_dup_pairs_cell_capped(emb: DataFrame, cap: int = EMBED_CELL_CAP) -> Dat
     # but keying by (label, sub) is what we want there too.
     parts = int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     sub = sub.repartition(parts, "label", "sub")
-    # `SPARK_GRAFT_CELL_PAIRS_PERSIST=1` caches the sub-banded relation
-    # so AQE's broadcast-join conversion cannot re-execute the chain
-    # (scan + cell-size aggregate + broadcast join + repartition) to
-    # build the broadcast side — the r12 before-plan shows exactly that
-    # duplication at small SF. Measured ~flat-to-slightly-negative at
-    # sf0.1 (paired A/B: semdedup 1.16 vs 1.21 s min — the duplicated
-    # chain is cheap, the cache write is not free), and at real scale
-    # the join stays sort-merge where ReuseExchange dedupes the two
-    # identical alias exchanges anyway, so the cache defaults OFF.
-    import os
-
-    if os.environ.get("SPARK_GRAFT_CELL_PAIRS_PERSIST", "0") == "1":
-        sub = sub.persist()
+    # No cache: a persist measured flat-to-negative (semdedup 1.16 vs 1.21 s).
     a = sub.alias("a")
     b = sub.alias("b")
     pairs = a.join(

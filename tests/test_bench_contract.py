@@ -63,3 +63,34 @@ def test_compact_line_small_registry_keeps_everything():
     c = bench.compact_line(_fake_out(5), "BENCH_SELF_rXX.json")
     assert c["queries_omitted"] == 0
     assert len(c["queries"]) == 5
+
+
+def test_anchor_totals_compare_one_query_set():
+    # A 0.0 or null anchor entry must drop out of BOTH totals: before,
+    # the Spark sum skipped falsy entries while the DuckDB sum kept
+    # them, and a null raised in the sum.
+    times = {"a": 2.0, "b": 3.0, "zero": 5.0, "null": 7.0, "unanchored": 11.0}
+    anchor = {"a": 1.0, "b": 4.0, "zero": 0.0, "null": None, "not_timed": 9.0}
+    got = bench.anchor_totals(times, anchor)
+    assert got == {
+        "n_compared": 2,
+        "total_spark_sec": 5.0,
+        "total_duckdb_sec": 5.0,
+        "aggregate_ratio": 1.0,
+    }
+    assert bench.anchor_totals(times, {})["aggregate_ratio"] is None
+
+
+def test_qtime_bare_trials_is_a_usage_error():
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "qtime.py"), "--trials"],
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert proc.returncode != 0
+    assert "requires a value" in proc.stderr
+    assert "Traceback" not in proc.stderr

@@ -119,21 +119,17 @@ def test_row_range_shard_scalable_has_no_single_task_sort(spark):
     assert ", true, 0" not in plan
 
 
-def test_global_rank_jvm_numbering_matches_arrow_pass(spark, monkeypatch):
-    # r12: the per-partition local row number moved from a mapInPandas
-    # pass to a monotonically_increasing_id projection. The two paths
-    # must assign identical global ranks on an adversarial key space
-    # (shuffled order, duplicate-free total order, multiple partitions).
+def test_global_rank_matches_sorted_position(spark):
+    # The per-partition local row number is a monotonically_increasing_id
+    # projection; the global rank must equal each key's position in the
+    # sorted key list on an adversarial key space (shuffled order,
+    # duplicate-free total order, multiple partitions).
     from distributed_mapreduce_spark.operators.partitioning import global_rank
 
-    df = spark.createDataFrame([((i * 53) % 997,) for i in range(997)], ["key"])
-    monkeypatch.setenv("SPARK_GRAFT_JVM_LOCAL_RN", "0")
-    want = {
-        (r["key"], r["rank"], r["total"])
-        for r in global_rank(df, [F.col("key")], num_partitions=8).collect()
-    }
-    spark.catalog.clearCache()
-    monkeypatch.setenv("SPARK_GRAFT_JVM_LOCAL_RN", "1")
+    keys = [(i * 53) % 997 for i in range(997)]
+    assert len(set(keys)) == 997
+    df = spark.createDataFrame([(k,) for k in keys], ["key"])
+    want = {(k, pos + 1, 997) for pos, k in enumerate(sorted(keys))}
     got = {
         (r["key"], r["rank"], r["total"])
         for r in global_rank(df, [F.col("key")], num_partitions=8).collect()

@@ -166,3 +166,46 @@ def test_driver_contract_location_independent(tmp_path):
         timeout=300,
     )
     assert "LOC_INDEP_OK" in out.stdout, out.stderr[-2000:]
+
+
+def test_latest_event_per_user_agg_packing_contract_is_loud(spark, sf_dir, tmp_path):
+    """The (ts, event_id) DECIMAL packing only orders correctly for
+    0 <= event_id < 10^11 and ts >= 1970: in-range data matches the
+    oracle, and a single row outside either bound fails the query."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from distributed_mapreduce_spark.workload.events import (
+        q_latest_event_per_user_agg,
+    )
+
+    got = sorted(
+        tuple(r)
+        for r in q_latest_event_per_user_agg(spark, sf_dir)
+        .select("user_id", "event_id", F.unix_micros("ts"), "event_type")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')"
+    )
+    want = sorted(
+        con.execute(
+            f"SELECT user_id, event_id, epoch_us(ts), event_type "
+            f"FROM ({ORACLES['latest_event_per_user_agg']})"
+        ).fetchall()
+    )
+    assert got and got == want
+
+    ok_ts = datetime.datetime(2024, 1, 1)
+    for i, (event_id, ts) in enumerate(
+        [(10**11, ok_ts), (7, datetime.datetime(1960, 1, 1))]
+    ):
+        bad_dir = tmp_path / f"bad{i}"
+        spark.createDataFrame(
+            [(1, ok_ts, 1, "view"), (event_id, ts, 2, "click")],
+            "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING",
+        ).write.parquet(str(bad_dir / "events.parquet"))
+        with pytest.raises(Exception, match="packing contract violated"):
+            q_latest_event_per_user_agg(spark, str(bad_dir)).collect()

@@ -18,6 +18,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+USAGE = "usage: python tools/qtime.py [sf_dir] query [query ...] [--trials N]"
+
+
+def _usage_error(msg: str) -> None:
+    print(f"qtime: {msg}\n{USAGE}", file=sys.stderr)
+    raise SystemExit(2)
+
 
 def main() -> int:
     # Accept both `--trials=N` and `--trials N` (ADVICE r12: the
@@ -31,10 +38,16 @@ def main() -> int:
         a = argv[i]
         if a.startswith("--trials"):
             if "=" in a:
-                trials = int(a.split("=", 1)[1])
-            else:
+                value = a.split("=", 1)[1]
+            elif i + 1 < len(argv):
                 i += 1
-                trials = int(argv[i])
+                value = argv[i]
+            else:
+                _usage_error("--trials requires a value")
+            try:
+                trials = int(value)
+            except ValueError:
+                _usage_error(f"--trials requires an integer, got {value!r}")
         elif not a.startswith("--"):
             args.append(a)
         i += 1
