@@ -29,7 +29,6 @@ from distributed_mapreduce_spark.operators.aggregates import (
     agg_global_count,
 )
 from distributed_mapreduce_spark.operators.filters import grep_filter
-from distributed_mapreduce_spark.sources.sinks import sink_merged_csv
 
 
 class Engine:
@@ -134,9 +133,3 @@ class Engine:
         if mode == "m":
             return agg_count_per_machine(matched, "machine")
         raise ValueError(f"mode must be a/c/m, got {mode!r}")
-
-    # ---- sinks ----------------------------------------------------------
-
-    def export_csv(self, df: DataFrame, path: str) -> None:
-        """Single-file CSV sink (conglomerate parity)."""
-        sink_merged_csv(df, path)

@@ -7,7 +7,8 @@ values to the literal ``"empty"``, sanitizes keys (``/`` and space →
 hadoop/TrafficMapper.java:29-43, hadoop/TrafficReducer.java:37-38).
 
 These are load-bearing, non-standard semantics (SURVEY.md §7.4), so they
-live here as named, reusable Column transformations.
+live here as named, reusable Column transformations, each next to the
+DuckDB SQL twin its oracles use.
 """
 
 from __future__ import annotations
@@ -50,6 +51,12 @@ def normalize_empty(col: Column | str) -> Column:
     return F.when(t.isNull() | (t == ""), F.lit(EMPTY_SENTINEL)).otherwise(t)
 
 
+def sql_normalize_empty(expr: str) -> str:
+    """DuckDB twin of :func:`normalize_empty`."""
+    t = sql_trim_ws(expr)
+    return f"CASE WHEN {expr} IS NULL OR {t} = '' THEN '{EMPTY_SENTINEL}' ELSE {t} END"
+
+
 def sanitize_key(col: Column | str) -> Column:
     """Key canonicalization: ``/`` → ``_``, space → ``_``, empty → ``"empty"``.
 
@@ -58,6 +65,11 @@ def sanitize_key(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.translate(normalize_empty(c), "/ ", "__")
+
+
+def sql_sanitize_key(expr: str) -> str:
+    """DuckDB twin of :func:`sanitize_key`."""
+    return f"replace(replace({sql_normalize_empty(expr)}, '/', '_'), ' ', '_')"
 
 
 def pct_of_total_str(count_col: Column, total_col: Column) -> Column:

@@ -20,16 +20,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-#: Typed metadata carried next to every media blob.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),   # image/audio/video
-        T.StructField("codec", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "doc_id bigint, width int, height int, n_bytes bigint, decode_error string"

@@ -24,14 +24,6 @@ def agg_count_per_value(df: DataFrame, key_col: str, value_col: str) -> DataFram
     return df.groupBy(key_col, value_col).agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def agg_sum_counts(df: DataFrame, key_col: str, count_col: str) -> DataFrame:
-    """Sum partial counts per key (classic wordcount reduce).
-
-    Reference: hadoop/TrafficReducer.java:22-31.
-    """
-    return df.groupBy(key_col).agg(F.sum(F.col(count_col)).alias("total"))
-
-
 def agg_pct_of_total(
     df: DataFrame,
     group_col: str,

@@ -9,7 +9,7 @@ declaring the predicate lets Spark run it before any exchange.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -59,8 +59,3 @@ def grep_filter(df: DataFrame, regex: str, line_col: str = "value") -> DataFrame
     and this is a single pushable predicate.
     """
     return df.filter(F.col(line_col).rlike(regex))
-
-
-def where_clause(df: DataFrame, predicate: Column) -> DataFrame:
-    """Generic declarative WHERE — the engine-level predicate entry point."""
-    return df.filter(predicate)

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from distributed_mapreduce_spark.functions import hash_u32
+
 
 def _persist_prefix_input(df: DataFrame) -> DataFrame:
     """Persist the (narrow) input of a range-shuffle prefix-sum/rank.
@@ -85,7 +87,7 @@ def hash_bucket(df: DataFrame, key_col: str, num_buckets: int, bucket_col: str =
     Murmur3 `F.hash` (engine-specific). SQL twin:
     ``('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 8))::BIGINT % n``.
     """
-    h = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10).cast("long")
+    h = hash_u32(F.col(key_col).cast("string"))
     return df.withColumn(bucket_col, (h % F.lit(num_buckets)).cast("int"))
 
 

@@ -9,7 +9,6 @@ full family is exposed here since the engine's SQL surface implies it.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 
 def union_all(*dfs: DataFrame) -> DataFrame:
@@ -27,11 +26,6 @@ def distinct_rows(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     if cols:
         df = df.select(*cols)
     return df.distinct()
-
-
-def order_by(df: DataFrame, *cols: str | Column) -> DataFrame:
-    """Global ORDER BY (range-partitioned sort; no single-node merge)."""
-    return df.orderBy(*cols)
 
 
 def top_k(df: DataFrame, k: int, *order_cols: Column) -> DataFrame:

@@ -74,11 +74,6 @@ def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one of the harness tables from a scale-factor directory."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def scan_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
     """Read a parquet directory whose files were written with DIFFERENT
     (evolving) schemas: `mergeSchema` unions the per-file schemas and

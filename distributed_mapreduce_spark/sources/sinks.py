@@ -39,11 +39,6 @@ def sink_merged_csv(
     w.csv(path)
 
 
-def sink_csv(df: DataFrame, path: str, header: bool = True, mode: str = "overwrite") -> None:
-    """Parallel (multi-file) CSV write."""
-    df.write.mode(mode).option("header", header).csv(path)
-
-
 def sink_jsonl(
     df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None
 ) -> None:

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from distributed_mapreduce_spark.functions import bp, count_in, hash_u32, ngrams, tokens
+
 #: documents schema (matches /root/testdata/sf*/documents.parquet).
 DOCS_SCHEMA = T.StructType(
     [
@@ -93,12 +95,11 @@ def lsh_band_keys(docs: DataFrame) -> DataFrame:
         MH_PRIME,
         MINHASH_BANDS,
         MINHASH_ROWS,
-        _hash_u32,
         shingles,
     )
 
     bh = F.array_distinct(
-        F.transform(shingles(F.col("text")), lambda s: _hash_u32(s, "mh_"))
+        F.transform(shingles(F.col("text")), lambda s: hash_u32(s, "mh_"))
     )
     base = F.col("bh")
 
@@ -191,21 +192,15 @@ def corpus_prep_stream(docs: DataFrame) -> DataFrame:
     import pandas as pd  # local: keep module import light
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from distributed_mapreduce_spark.workload.text import (
-        STOPWORDS,
-        _bp,
-        _count_in,
-        _tokens,
-        scrub_pii,
-    )
+    from distributed_mapreduce_spark.workload.text import STOPWORDS, scrub_pii
 
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     scrubbed = docs.select("doc_id", scrub_pii(F.col("text")).alias("text"))
     kept = scrubbed.select(
         "doc_id",
         "text",
         F.size(toks).alias("n_tokens"),
-        _bp(_count_in(toks, STOPWORDS), F.size(toks)).alias("stop_bp"),
+        bp(count_in(toks, STOPWORDS), F.size(toks)).alias("stop_bp"),
     ).filter((F.col("n_tokens") >= 40) & (F.col("stop_bp") >= 300))
 
     out_schema = "fp string, keep_id bigint"
@@ -239,14 +234,11 @@ def dsir_gate_stream(docs: DataFrame, lam_by_bucket: dict[int, int]) -> DataFram
     the batch query's exact integer semantics; certified bit-equal to
     `dsir_importance_weights` on a closed corpus in
     tests/test_streaming.py."""
-    from distributed_mapreduce_spark.workload.dedup import _hash_u32
     from distributed_mapreduce_spark.workload.importance import (
         IR_DIM,
         IR_KEEP_MIN_PPM,
         IR_SEED,
     )
-    from distributed_mapreduce_spark.workload.quality import _ngrams
-    from distributed_mapreduce_spark.workload.text import _tokens
 
     if sorted(lam_by_bucket) != list(range(IR_DIM)):
         raise ValueError(f"model must be total over [0, {IR_DIM})")
@@ -259,15 +251,15 @@ def dsir_gate_stream(docs: DataFrame, lam_by_bucket: dict[int, int]) -> DataFram
         F.lit(0).cast("long"),
         lambda acc, g: acc
         + F.element_at(
-            warr, (_hash_u32(g, IR_SEED) % IR_DIM + 1).cast("int")
+            warr, (hash_u32(g, IR_SEED) % IR_DIM + 1).cast("int")
         ).cast("long"),
     )
     scored = docs.select(
-        "doc_id", _tokens(F.col("text")).alias("__toks")
+        "doc_id", tokens(F.col("text")).alias("__toks")
     ).select(
         "doc_id",
         F.concat(
-            F.col("__toks"), _ngrams(F.col("__toks"), 2)
+            F.col("__toks"), ngrams(F.col("__toks"), 2)
         ).alias("__grams"),
     ).select(
         "doc_id",
@@ -306,8 +298,6 @@ def kmv_sketch_stream(docs: DataFrame) -> DataFrame:
     import pandas as pd  # local: keep module import light
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from distributed_mapreduce_spark.workload.dedup import _hash_u32, _tokens
-    from distributed_mapreduce_spark.workload.quality import _ngrams
     from distributed_mapreduce_spark.workload.sketches import KMV_K
 
     out_schema = "source string, n_kmv bigint, h_k bigint, est_distinct bigint"
@@ -345,12 +335,12 @@ def kmv_sketch_stream(docs: DataFrame) -> DataFrame:
 
     hs = (
         # token array materialized once per row (mirrors the batch twin)
-        docs.select("source", _tokens(F.col("text")).alias("__toks"))
+        docs.select("source", tokens(F.col("text")).alias("__toks"))
         .select(
             "source",
-            F.explode(_ngrams(F.col("__toks"), 2)).alias("g"),
+            F.explode(ngrams(F.col("__toks"), 2)).alias("g"),
         )
-        .select("source", _hash_u32(F.col("g"), "kv_").alias("h"))
+        .select("source", hash_u32(F.col("g"), "kv_").alias("h"))
     )
     return hs.groupBy("source").applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
@@ -389,7 +379,7 @@ def cms_sketch_stream(docs: DataFrame) -> DataFrame:
         yield pd.DataFrame({"j": [key[0]], "b": [key[1]], "c": [c]})
 
     toks = docs.select(
-        F.explode(F.filter(F.split(F.col("text"), " ", -1), lambda x: x != "")).alias(
+        F.explode(tokens(F.col("text"))).alias(
             "term"
         )
     )

@@ -13,11 +13,11 @@ is O(active windows), not O(stream length).
 
 from __future__ import annotations
 
-import importlib.util
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from distributed_mapreduce_spark.functions import hash_u32
 
 #: events schema with event-time as TimestampType (micros).
 EVENTS_SCHEMA = T.StructType(
@@ -171,77 +171,6 @@ def stateful_user_counts(events: DataFrame, watermark: str = "2 hours") -> DataF
         .groupBy("user_id")
         .applyInPandasWithState(
             fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def stateful_user_counts_tws(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """`stateful_user_counts` on the MODERN custom-state API
-    (`transformWithStateInPandas`, Spark 4): a `StatefulProcessor` with
-    a typed ValueState counter, update-mode emission — semantics
-    bit-identical to the applyInPandasWithState twin and to the batch
-    `groupBy(user_id).count()` on a closed input (certified in
-    tests/test_streaming_tws.py).
-
-    Why both APIs exist here: transformWithState is the forward path
-    (typed state variables, timers, TTL, initial state, and the RocksDB
-    state store requirement that also buys changelog checkpointing at
-    scale); applyInPandasWithState is the stable one. The per-group
-    Python overhead that bounds the old API (~93 µs/key/batch,
-    STATEFUL_PROFILE_r11.json) is measured for this one by the same
-    key-count sweep in tools/stateful_profile.py — see the artifact
-    for which to budget against at 100 TB ingest.
-
-    NOTE: requires (a) the RocksDB state store provider
-    (`spark.sql.streaming.stateStore.providerClass` =
-    ...RocksDBStateStoreProvider), set by callers before starting the
-    query (the conf is read at query start), and (b) the `protobuf`
-    Python package — the API's state protocol imports it in the TWS
-    driver worker. This container ships pyspark WITHOUT protobuf, so
-    the tests in tests/test_streaming_tws.py are skipif-gated on the
-    import; the operator itself is real and runs unchanged where the
-    dependency exists (verified here up to the worker's protobuf
-    import: the query plans, starts, and fails only inside
-    StateMessage_pb2)."""
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # parent 'google' namespace absent
-        has_protobuf = False
-    if not has_protobuf:
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(pyspark's TWS state protocol); not installed in this "
-            "environment — use stateful_user_counts "
-            "(applyInPandasWithState) instead"
-        )
-    import pandas as pd  # local: keep module import light
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class CountProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState("n", "n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._count.get()[0] if self._count.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._count.update((n,))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            CountProcessor(),
-            "user_id bigint, n_events bigint",
-            "update",
-            "None",
         )
     )
 
@@ -564,16 +493,7 @@ def stratified_sample_stream(events: DataFrame, sample_bp: dict[str, int]) -> Da
     and yields EXACTLY the batch-selected row set (same rows whatever
     the micro-batch boundaries — the property rand()-based sampling
     lacks)."""
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("samp_"), F.col("event_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 10000
-    )
+    h = hash_u32(F.col("event_id").cast("string"), "samp_") % 10000
     bp = F.lit(10000)
     for etype, v in sample_bp.items():
         bp = F.when(F.col("event_type") == etype, v).otherwise(bp)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import hash_u32
 from distributed_mapreduce_spark.operators.asof import asof_join, range_join_binned
 from distributed_mapreduce_spark.workload.registry import query, table
 
@@ -648,7 +649,7 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-replication audit, fileserver.py:739-790)."""
 
     def cksum(df: DataFrame, tbl: str, enc: F.Column) -> DataFrame:
-        h = F.conv(F.substring(F.md5(enc), 1, 8), 16, 10).cast("long")
+        h = hash_u32(enc)
         return df.agg(
             F.lit(tbl).alias("tbl"),
             F.count(F.lit(1)).alias("n_rows"),

@@ -40,8 +40,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from distributed_mapreduce_spark.functions import sql_tokens, tokens
 from distributed_mapreduce_spark.workload.registry import query, table
-from distributed_mapreduce_spark.workload.text import _sql_tokens, _tokens
 
 #: Number of merge rounds learned (and unrolled in the oracle CTE).
 BPE_N_MERGES = 6
@@ -98,7 +98,7 @@ def _word_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials)."""
     docs = table(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(_tokens(F.col("text"))).alias("word"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
         .where(F.col("freq") >= BPE_MIN_FREQ)
@@ -189,7 +189,7 @@ def _oracle_prelude() -> str:
     rounds = ",".join(_oracle_round(k) for k in range(BPE_N_MERGES))
     return f"""
     WITH tok AS MATERIALIZED (
-      SELECT unnest({_sql_tokens("text")}) AS word FROM documents
+      SELECT unnest({sql_tokens("text")}) AS word FROM documents
     ), w0 AS MATERIALIZED (
       SELECT word, CAST(count(*) AS BIGINT) AS freq
       FROM tok GROUP BY 1 HAVING count(*) >= {BPE_MIN_FREQ}
@@ -248,7 +248,7 @@ def q_tokenizer_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT word, CAST(len(syms) AS BIGINT) AS n_syms
       FROM words{BPE_N_MERGES}
     ), doc_tok AS MATERIALIZED (
-      SELECT doc_id, unnest({_sql_tokens("text")}) AS word FROM documents
+      SELECT doc_id, unnest({sql_tokens("text")}) AS word FROM documents
     )
     SELECT d.doc_id,
            CAST(count(*) AS BIGINT) AS n_tokens,
@@ -274,7 +274,7 @@ def q_tokenizer_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = words.select("word", F.size("syms").cast("long").alias("n_syms"))
     docs = table(spark, sf_dir, "documents")
     out = (
-        docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("word"))
+        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("word"))
         .join(vocab, "word", "left")
         .groupBy("doc_id")
         .agg(

@@ -19,10 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.functions.strings import (
+from distributed_mapreduce_spark.functions import (
+    hash_u32,
     normalize_empty,
     pct_of_total_sql,
     sanitize_key,
+    sql_hash_u32,
+    sql_normalize_empty,
+    sql_sanitize_key,
+    sql_trim_ws,
 )
 from distributed_mapreduce_spark.operators.aggregates import (
     agg_count_per_machine,
@@ -41,13 +46,6 @@ from distributed_mapreduce_spark.operators.partitioning import hash_bucket, rang
 from distributed_mapreduce_spark.operators.setops import distinct_rows, top_k, union_all
 from distributed_mapreduce_spark.workload.registry import query, table
 
-# SQL fragment twins of functions.strings (oracle side).
-# Go-TrimSpace-parity trim (see functions.strings.WS_CLASS): real control
-# chars embedded in the pattern — DuckDB standard strings don't unescape.
-_T = "regexp_replace({c}, '^[ \t\n\r\f]+|[ \t\n\r\f]+$', '', 'g')"
-_NORM = "CASE WHEN {c} IS NULL OR " + _T + " = '' THEN 'empty' ELSE " + _T + " END"
-_SANITIZE = "replace(replace(" + _NORM + ", '/', '_'), ' ', '_')"
-
 # Regex used by the grep-family queries (hits a strict subset of docs).
 GREP_PATTERN = "window .*hash"
 # Whole-line regex for the SELECT surface: exercises cross-column
@@ -64,9 +62,9 @@ SELECT_PATTERN = "spark .*,en,"
     "flagship_pct",
     oracle=f"""
     WITH g AS (
-      SELECT {_NORM.format(c='o_orderpriority')} AS priority, count(*) AS cnt
+      SELECT {sql_normalize_empty('o_orderpriority')} AS priority, count(*) AS cnt
       FROM orders
-      WHERE regexp_replace(o_orderstatus, '^[ \t\n\r\f]+|[ \t\n\r\f]+$', '', 'g') = 'F'
+      WHERE {sql_trim_ws('o_orderstatus')} = 'F'
       GROUP BY 1
     )
     SELECT priority, cnt, {pct_of_total_sql('cnt', 'sum(cnt) OVER ()')} AS pct
@@ -90,9 +88,9 @@ def flagship_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "filter_eq_param",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-    FROM orders WHERE regexp_replace(o_orderstatus, '^[ \t\n\r\f]+|[ \t\n\r\f]+$', '', 'g') = 'F'
+    FROM orders WHERE {sql_trim_ws('o_orderstatus')} = 'F'
     """,
 )
 def q_filter_eq_param(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -189,7 +187,7 @@ def q_project_column(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "normalize_empty",
     oracle=f"""
-    SELECT {_NORM.format(c='o_orderpriority')} AS priority, count(*) AS cnt
+    SELECT {sql_normalize_empty('o_orderpriority')} AS priority, count(*) AS cnt
     FROM orders GROUP BY 1
     """,
 )
@@ -205,7 +203,7 @@ def q_normalize_empty(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sanitize_key",
     oracle=f"""
-    SELECT DISTINCT {_SANITIZE.format(c='p_type')} AS key FROM part
+    SELECT DISTINCT {sql_sanitize_key('p_type')} AS key FROM part
     """,
 )
 def q_sanitize_key(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -581,9 +579,9 @@ def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "partition_hash_assign",
-    oracle="""
+    oracle=f"""
     SELECT bucket, count(*) AS cnt FROM (
-      SELECT CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT % 8 AS INTEGER) AS bucket
+      SELECT CAST({sql_hash_u32('CAST(o_orderkey AS VARCHAR)')} % 8 AS INTEGER) AS bucket
       FROM orders
     ) GROUP BY bucket
     """,
@@ -755,14 +753,12 @@ def q_partition_rendezvous_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast 1-row total. The oracle mirrors argmax via a per-key
     row_number window (DuckDB has no struct max), same (wt DESC, k)
     order."""
-    from distributed_mapreduce_spark.workload.dedup import _hash_u32
-
     orders = table(spark, sf_dir, "orders")
     key = F.col("o_orderkey").cast("string")
     arr = F.array(
         *[
             F.struct(
-                _hash_u32(
+                hash_u32(
                     F.concat(key, F.lit(f"|node{i}")), "rv_"
                 ).alias("wt"),
                 F.lit(RV_NODES - 1 - i).alias("ni"),
@@ -837,7 +833,7 @@ RING_BUCKET_SHIFT = 24
 
 def _ring_points(vnodes: int) -> list[int]:
     """Sorted ring points encoded point*16+node — driver-side md5 of
-    'ring_node{n}|v{v}', byte-identical to `_hash_u32` so the literal
+    'ring_node{n}|v{v}', byte-identical to `hash_u32` so the literal
     constants are reproducible from the seed strings alone (no RNG,
     no engine dependence). node < 16 keeps the encoding order-stable
     on the point."""
@@ -883,7 +879,7 @@ def _ring_oracle() -> str:
              list_min(list_filter([{lits}], p -> p // 16 >= h)),
              {_ring_points(vn)[0]}) % 16 AS node
     FROM (SELECT o_orderkey,
-                 ('0x' || substr(md5('ringk_' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT AS h
+                 {sql_hash_u32('CAST(o_orderkey AS VARCHAR)', 'ringk_')} AS h
           FROM orders)"""
         )
     assign = " UNION ALL ".join(parts)
@@ -931,12 +927,10 @@ def q_partition_consistent_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1) per key. The oracle resolves the same successor by direct
     list_min over the literal ring (fine at oracle scale); both
     encode (point*16+node) so order and node decode identically."""
-    from distributed_mapreduce_spark.workload.dedup import _hash_u32
-
     orders = table(spark, sf_dir, "orders")
     keys = orders.select(
         "o_orderkey",
-        _hash_u32(F.col("o_orderkey").cast("string"), "ringk_").alias("h"),
+        hash_u32(F.col("o_orderkey").cast("string"), "ringk_").alias("h"),
     )
     bucket_rows = []
     for name, vn in RING_VARIANTS:

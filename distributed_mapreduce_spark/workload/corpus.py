@@ -34,30 +34,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.dedup import (
-    _fp_norm,
-    _hash_u32,
-    _sql_hash_u32,
+from distributed_mapreduce_spark.functions import (
+    bp,
+    count_in,
+    fp_norm,
+    hash_u32,
+    ngrams,
+    sql_bp,
+    sql_count_in,
+    sql_fp_norm,
+    sql_hash_u32,
+    sql_ngrams,
+    sql_tokens,
+    tokens,
 )
 from distributed_mapreduce_spark.workload.quality import (
     VOCAB_MIN_DF as _VOCAB_MIN_DF,
 )
-from distributed_mapreduce_spark.workload.quality import _ngrams, _sql_ngrams
 from distributed_mapreduce_spark.workload.registry import (
     query,
     table,
     wide_shuffle_parts,
 )
-from distributed_mapreduce_spark.workload.text import (
-    BPE_REGEX,
-    STOPWORDS,
-    _bp,
-    _count_in,
-    _sql_bp,
-    _sql_count_in,
-    _sql_tokens,
-    _tokens,
-)
+from distributed_mapreduce_spark.workload.text import BPE_REGEX, STOPWORDS
 
 #: Deterministic eval-set gate: ~1% of docs stand in for the benchmark
 #: suite (doc_id % DECON_EVAL_MOD == 0).
@@ -74,14 +73,14 @@ DECON_FLAG_MIN = 2
 
 _DECON_SQL = f"""
     WITH t AS (
-      SELECT doc_id, list_distinct({_sql_ngrams(_sql_tokens('text'), DECON_N)}) AS grams
+      SELECT doc_id, list_distinct({sql_ngrams(sql_tokens('text'), DECON_N)}) AS grams
       FROM (SELECT doc_id, text FROM documents)
     ), eg AS (
-      SELECT DISTINCT {_sql_hash_u32('gram', 'dc_')} AS gh
+      SELECT DISTINCT {sql_hash_u32('gram', 'dc_')} AS gh
       FROM t, unnest(grams) AS u(gram)
       WHERE doc_id % {DECON_EVAL_MOD} = 0
     ), tg AS (
-      SELECT doc_id, {_sql_hash_u32('gram', 'dc_')} AS gh
+      SELECT doc_id, {sql_hash_u32('gram', 'dc_')} AS gh
       FROM t, unnest(grams) AS u(gram)
       WHERE doc_id % {DECON_EVAL_MOD} <> 0
     )
@@ -114,18 +113,18 @@ def q_decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is ~1% of the corpus, so hashing it from the full relation
         # would do 100x the needed work (measured 4x whole-query cost).
         side = docs.filter(pred).select("doc_id", "text").repartition(par)
-        # token array materialized once per row: _ngrams references its
+        # token array materialized once per row: ngrams references its
         # input ~5x inside non-codegen HOF lambdas, so an inlined
         # tokenizer would re-run per reference
         return (
-            side.select("doc_id", _tokens(F.col("text")).alias("__toks"))
+            side.select("doc_id", tokens(F.col("text")).alias("__toks"))
             .select(
                 "doc_id",
                 F.explode(
-                    F.array_distinct(_ngrams(F.col("__toks"), DECON_N))
+                    F.array_distinct(ngrams(F.col("__toks"), DECON_N))
                 ).alias("gram"),
             )
-            .select("doc_id", _hash_u32(F.col("gram"), "dc_").alias("gh"))
+            .select("doc_id", hash_u32(F.col("gram"), "dc_").alias("gh"))
         )
 
     eval_grams = (
@@ -152,12 +151,12 @@ LM_MIN_COUNT = 3
     "lm_bigram_counts",
     oracle=f"""
     WITH t AS (
-      SELECT {_sql_tokens('text')} AS toks FROM documents
+      SELECT {sql_tokens('text')} AS toks FROM documents
     ), bg AS (
       SELECT gram,
              string_split(gram, ' ')[1] AS w1,
              CAST(count(*) AS BIGINT) AS c2
-      FROM t, unnest({_sql_ngrams('toks', 2)}) AS u(gram)
+      FROM t, unnest({sql_ngrams('toks', 2)}) AS u(gram)
       GROUP BY gram
     ), ug AS (
       SELECT tok AS w1, CAST(count(*) AS BIGINT) AS c1
@@ -181,9 +180,9 @@ def q_lm_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials, one equi-join on w1 (AQE-chosen strategy — the
     unigram table is sublinear but unbounded)."""
     docs = table(spark, sf_dir, "documents")
-    toks = docs.select(_tokens(F.col("text")).alias("toks"))
+    toks = docs.select(tokens(F.col("text")).alias("toks"))
     bg = (
-        toks.select(F.explode(_ngrams(F.col("toks"), 2)).alias("gram"))
+        toks.select(F.explode(ngrams(F.col("toks"), 2)).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("n_bigram"))
         .filter(F.col("n_bigram") >= LM_MIN_COUNT)
@@ -210,9 +209,9 @@ def q_lm_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_lm_fluency",
     oracle=f"""
     WITH t AS MATERIALIZED (
-      SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents
+      SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
     ), db AS MATERIALIZED (
-      SELECT doc_id, gram FROM t, unnest({_sql_ngrams('toks', 2)}) AS u(gram)
+      SELECT doc_id, gram FROM t, unnest({sql_ngrams('toks', 2)}) AS u(gram)
     ), bg AS (
       SELECT gram, CAST(count(*) AS BIGINT) AS c2 FROM db GROUP BY gram
     ), ug AS (
@@ -246,8 +245,8 @@ def q_quality_lm_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     No windows, no cross joins; docs with < 2 tokens have no bigrams
     and drop out, matching the oracle."""
     docs = table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
-    db = t.select("doc_id", F.explode(_ngrams(F.col("toks"), 2)).alias("gram"))
+    t = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
+    db = t.select("doc_id", F.explode(ngrams(F.col("toks"), 2)).alias("gram"))
     bg = db.groupBy("gram").agg(F.count(F.lit(1)).cast("long").alias("c2"))
     ug = (
         t.select(F.explode("toks").alias("tok"))
@@ -273,11 +272,11 @@ def q_quality_lm_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT lang,
            CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(len({_sql_tokens('text')})) AS BIGINT) AS n_words,
+           CAST(sum(len({sql_tokens('text')})) AS BIGINT) AS n_words,
            CAST(sum(len(regexp_extract_all(text, '{BPE_REGEX}'))) AS BIGINT)
              AS n_bpe_tokens,
            CAST(sum(len(regexp_extract_all(text, '{BPE_REGEX}'))) * 10000
-                // sum(len({_sql_tokens('text')})) AS BIGINT) AS fertility_bp,
+                // sum(len({sql_tokens('text')})) AS BIGINT) AS fertility_bp,
            CAST(sum(n_chars) * 10000
                 // sum(len(regexp_extract_all(text, '{BPE_REGEX}'))) AS BIGINT)
              AS chars_per_token_bp
@@ -293,7 +292,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     columnar expressions folded into one per-language hash aggregate;
     integer floor ratios keep the oracle exact."""
     docs = table(spark, sf_dir, "documents")
-    words = F.size(_tokens(F.col("text")))
+    words = F.size(tokens(F.col("text")))
     bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_REGEX), F.lit(0)))
     agg = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -384,15 +383,15 @@ QF_MAX_DUP_TRI_BP = 2000
     "quality_filter_reasons",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, text, {_sql_tokens('text')} AS toks FROM documents
+      SELECT doc_id, text, {sql_tokens('text')} AS toks FROM documents
     ), s AS (
       SELECT doc_id,
              len(toks) AS n_tokens,
-             {_sql_bp("length(text) - length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))",
+             {sql_bp("length(text) - length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))",
                       'length(text)')} AS punct_bp,
-             {_sql_bp(_sql_count_in('toks', STOPWORDS), 'len(toks)')} AS stopword_bp,
-             {_sql_bp(f"len({_sql_ngrams('toks', 3)}) - len(list_distinct({_sql_ngrams('toks', 3)}))",
-                      f"len({_sql_ngrams('toks', 3)})")} AS dup_tri_bp
+             {sql_bp(sql_count_in('toks', STOPWORDS), 'len(toks)')} AS stopword_bp,
+             {sql_bp(f"len({sql_ngrams('toks', 3)}) - len(list_distinct({sql_ngrams('toks', 3)}))",
+                      f"len({sql_ngrams('toks', 3)})")} AS dup_tri_bp
       FROM t
     )
     SELECT doc_id,
@@ -418,22 +417,22 @@ def q_quality_filter_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     four signals in one projection), zero shuffle — the filter itself
     is free at any scale; only the audit aggregate costs anything."""
     docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     n_chars = F.length(F.col("text"))
     punct = n_chars - F.length(F.regexp_replace(F.col("text"), "[a-z0-9 ]", ""))
-    tri = _ngrams(F.col("toks"), 3)
+    tri = ngrams(F.col("toks"), 3)
     s = docs.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
-        _bp(punct, n_chars).alias("punct_bp"),
-        _bp(_count_in(toks, STOPWORDS), F.size(toks)).alias("stopword_bp"),
+        bp(punct, n_chars).alias("punct_bp"),
+        bp(count_in(toks, STOPWORDS), F.size(toks)).alias("stopword_bp"),
         toks.alias("toks"),
     ).select(
         "doc_id",
         "n_tokens",
         "punct_bp",
         "stopword_bp",
-        _bp(F.size(tri) - F.size(F.array_distinct(tri)), F.size(tri)).alias("dup_tri_bp"),
+        bp(F.size(tri) - F.size(F.array_distinct(tri)), F.size(tri)).alias("dup_tri_bp"),
     )
     mask = (
         F.when(F.col("n_tokens") < QF_MIN_TOKENS, 1).otherwise(0)
@@ -461,10 +460,10 @@ PASSAGE_N = 3
     "dedup_repeated_passages",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, list_distinct({_sql_ngrams(_sql_tokens('text'), PASSAGE_N)}) AS grams
+      SELECT doc_id, list_distinct({sql_ngrams(sql_tokens('text'), PASSAGE_N)}) AS grams
       FROM documents
     ), g AS (
-      SELECT doc_id, {_sql_hash_u32('gram', 'pp_')} AS gh
+      SELECT doc_id, {sql_hash_u32('gram', 'pp_')} AS gh
       FROM t, unnest(grams) AS u(gram)
     ), idx AS (
       SELECT gh, count(*) AS nd FROM g GROUP BY gh
@@ -472,7 +471,7 @@ PASSAGE_N = 3
     SELECT g.doc_id,
            CAST(count(*) AS BIGINT) AS n_passages,
            CAST(count(*) FILTER (idx.nd > 1) AS BIGINT) AS n_shared,
-           {_sql_bp('count(*) FILTER (idx.nd > 1)', 'count(*)')} AS boilerplate_bp
+           {sql_bp('count(*) FILTER (idx.nd > 1)', 'count(*)')} AS boilerplate_bp
     FROM g JOIN idx USING (gh)
     GROUP BY g.doc_id
     """,
@@ -495,14 +494,14 @@ def q_dedup_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = (
         # token array materialized once per row (see decontam note)
-        docs.select("doc_id", _tokens(F.col("text")).alias("__toks"))
+        docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
         .select(
             "doc_id",
             F.explode(
-                F.array_distinct(_ngrams(F.col("__toks"), PASSAGE_N))
+                F.array_distinct(ngrams(F.col("__toks"), PASSAGE_N))
             ).alias("gram"),
         )
-        .select("doc_id", _hash_u32(F.col("gram"), "pp_").alias("gh"))
+        .select("doc_id", hash_u32(F.col("gram"), "pp_").alias("gh"))
     )
     # Input-scaled width for the passage-hash exchanges (same shape and
     # fix as text_ngram_novelty): at x1000 the 32-wide default buffers
@@ -535,7 +534,7 @@ QM_W_STOP, QM_W_BASE = 205, -5
 
 
 def _qm_bucket_py(tok: str) -> int:
-    """Python twin of `_hash_u32(tok, 'qm_') % QM_DIM` (same md5
+    """Python twin of `hash_u32(tok, 'qm_') % QM_DIM` (same md5
     scheme, so the weight table below lines up with both engines)."""
     import hashlib
 
@@ -572,9 +571,9 @@ _QM_SCORE_SQL = f"""
       SELECT doc_id,
              CAST(len(toks) AS BIGINT) AS n_tokens,
              CAST(coalesce(list_sum(list_transform(toks,
-                    t -> ({_QM_SQL_W})[({_sql_hash_u32('t', 'qm_')} % {QM_DIM}) + 1])), 0)
+                    t -> ({_QM_SQL_W})[({sql_hash_u32('t', 'qm_')} % {QM_DIM}) + 1])), 0)
                AS BIGINT) AS logit_sum
-      FROM (SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents)
+      FROM (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents)
 """
 
 
@@ -584,13 +583,13 @@ def _qm_score_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-literal weight table; no explode, no shuffle."""
     docs = table(spark, sf_dir, "documents")
     warr = F.array(*[F.lit(x) for x in QM_WEIGHTS])
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     score = F.aggregate(
         toks,
         F.lit(0).cast("long"),
         lambda acc, t: acc
         + F.element_at(
-            warr, (_hash_u32(t, "qm_") % QM_DIM + 1).cast("int")
+            warr, (hash_u32(t, "qm_") % QM_DIM + 1).cast("int")
         ).cast("long"),
     )
     return docs.select(
@@ -690,14 +689,14 @@ ES_K = 4
     "dedup_exact_substring_runs",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_sql_ngrams(_sql_tokens('text'), ES_K)} AS grams
+      SELECT doc_id, {sql_ngrams(sql_tokens('text'), ES_K)} AS grams
       FROM documents
     ), g0 AS (
       SELECT doc_id, unnest(grams) AS gram,
              generate_subscripts(grams, 1) - 1 AS pos
       FROM t
     ), g AS MATERIALIZED (
-      SELECT doc_id, pos, {_sql_hash_u32('gram', 'es_')} AS gh FROM g0
+      SELECT doc_id, pos, {sql_hash_u32('gram', 'es_')} AS gh FROM g0
     ), idx AS (
       SELECT gh FROM g GROUP BY gh HAVING count(*) > 1
     ), d AS (
@@ -743,12 +742,12 @@ def q_dedup_exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = (
         # token array materialized once per row (see decontam note)
-        docs.select("doc_id", _tokens(F.col("text")).alias("__toks"))
+        docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
         .select(
             "doc_id",
-            F.posexplode(_ngrams(F.col("__toks"), ES_K)).alias("pos", "gram"),
+            F.posexplode(ngrams(F.col("__toks"), ES_K)).alias("pos", "gram"),
         )
-        .select("doc_id", "pos", _hash_u32(F.col("gram"), "es_").alias("gh"))
+        .select("doc_id", "pos", hash_u32(F.col("gram"), "es_").alias("gh"))
     )
     idx = (
         g.groupBy("gh")
@@ -770,19 +769,19 @@ def q_dedup_exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_exact_substring_strip",
     oracle=f"""
     WITH t0 AS MATERIALIZED (
-      SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents
+      SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
     ), tk AS MATERIALIZED (
       SELECT doc_id, unnest(toks) AS tok,
              generate_subscripts(toks, 1) - 1 AS t
       FROM t0
     ), gr AS (
-      SELECT doc_id, {_sql_ngrams('toks', ES_K)} AS grams FROM t0
+      SELECT doc_id, {sql_ngrams('toks', ES_K)} AS grams FROM t0
     ), g0 AS (
       SELECT doc_id, unnest(grams) AS gram,
              generate_subscripts(grams, 1) - 1 AS pos
       FROM gr
     ), g AS MATERIALIZED (
-      SELECT doc_id, pos, {_sql_hash_u32('gram', 'es_')} AS gh FROM g0
+      SELECT doc_id, pos, {sql_hash_u32('gram', 'es_')} AS gh FROM g0
     ), idx AS MATERIALIZED (
       SELECT gh, MIN(doc_id) AS cd FROM g GROUP BY gh HAVING count(*) > 1
     ), can AS MATERIALIZED (
@@ -809,9 +808,9 @@ def q_dedup_exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM kept GROUP BY doc_id
     )
     SELECT d.doc_id,
-           CAST(len({_sql_tokens('text')}) AS BIGINT) AS n_tokens,
+           CAST(len({sql_tokens('text')}) AS BIGINT) AS n_tokens,
            COALESCE(cl.n_kept, 0) AS n_kept,
-           CAST(len({_sql_tokens('text')}) - COALESCE(cl.n_kept, 0) AS BIGINT)
+           CAST(len({sql_tokens('text')}) - COALESCE(cl.n_kept, 0) AS BIGINT)
              AS n_removed,
            COALESCE(cl.clean_text, '') AS clean_text
     FROM documents d LEFT JOIN cl USING (doc_id)
@@ -844,16 +843,16 @@ def q_dedup_exact_substring_strip(spark: SparkSession, sf_dir: str) -> DataFrame
         spark.sparkContext.defaultParallelism
     )
     toks = docs.select(
-        "doc_id", F.posexplode(_tokens(F.col("text"))).alias("t", "tok")
+        "doc_id", F.posexplode(tokens(F.col("text"))).alias("t", "tok")
     )
     g = (
         # token array materialized once per row (see decontam note)
-        docs.select("doc_id", _tokens(F.col("text")).alias("__toks"))
+        docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
         .select(
             "doc_id",
-            F.posexplode(_ngrams(F.col("__toks"), ES_K)).alias("pos", "gram"),
+            F.posexplode(ngrams(F.col("__toks"), ES_K)).alias("pos", "gram"),
         )
-        .select("doc_id", "pos", _hash_u32(F.col("gram"), "es_").alias("gh"))
+        .select("doc_id", "pos", hash_u32(F.col("gram"), "es_").alias("gh"))
     )
     # Canonical occurrence via two HASH aggregates instead of
     # min(struct(doc_id, pos)): a struct min cannot live in an UnsafeRow
@@ -914,7 +913,7 @@ def q_dedup_exact_substring_strip(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     return (
         docs.select(
-            "doc_id", F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens")
+            "doc_id", F.size(tokens(F.col("text"))).cast("long").alias("n_tokens")
         )
         .join(cl, "doc_id", "left")
         .select(
@@ -939,7 +938,7 @@ QUOTA_PER_SOURCE = 5
     "priority_sample_k",
     oracle=f"""
     SELECT doc_id, source,
-           {_sql_hash_u32("CAST(doc_id AS VARCHAR)", 'prio_')} AS prio
+           {sql_hash_u32("CAST(doc_id AS VARCHAR)", 'prio_')} AS prio
     FROM documents
     ORDER BY prio, doc_id
     LIMIT {PRIO_K}
@@ -956,7 +955,7 @@ def q_priority_sample_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver merge; no global sort, no full shuffle, at any corpus
     size."""
     docs = table(spark, sf_dir, "documents")
-    prio = _hash_u32(F.col("doc_id").cast("string"), "prio_")
+    prio = hash_u32(F.col("doc_id").cast("string"), "prio_")
     return (
         docs.select("doc_id", "source", prio.alias("prio"))
         .orderBy("prio", "doc_id")
@@ -972,7 +971,7 @@ def q_priority_sample_k(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, source,
              row_number() OVER (
                PARTITION BY source
-               ORDER BY {_sql_hash_u32("CAST(doc_id AS VARCHAR)", 'quota_')}, doc_id
+               ORDER BY {sql_hash_u32("CAST(doc_id AS VARCHAR)", 'quota_')}, doc_id
              ) AS rn
       FROM documents
     ) WHERE rn <= {QUOTA_PER_SOURCE}
@@ -990,7 +989,7 @@ def q_stratified_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents")
-    prio = _hash_u32(F.col("doc_id").cast("string"), "quota_")
+    prio = hash_u32(F.col("doc_id").cast("string"), "quota_")
     w = Window.partitionBy("source").orderBy(prio, F.col("doc_id"))
     return (
         docs.select("doc_id", "source", F.row_number().over(w).alias("rn"))
@@ -1004,7 +1003,7 @@ def q_stratified_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT 'n_docs' AS metric, CAST(count(*) AS BIGINT) AS value FROM documents
     UNION ALL
-    SELECT 'total_tokens', CAST(sum(len({_sql_tokens('text')})) AS BIGINT)
+    SELECT 'total_tokens', CAST(sum(len({sql_tokens('text')})) AS BIGINT)
     FROM documents
     UNION ALL
     SELECT 'n_dup_docs',
@@ -1012,7 +1011,7 @@ def q_stratified_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     UNION ALL
     SELECT 'vocab_size', CAST(count(*) AS BIGINT) FROM (
-      SELECT tok FROM (SELECT doc_id, unnest({_sql_tokens('text')}) AS tok
+      SELECT tok FROM (SELECT doc_id, unnest({sql_tokens('text')}) AS tok
                        FROM documents)
       GROUP BY tok HAVING count(DISTINCT doc_id) >= {_VOCAB_MIN_DF}
     )
@@ -1032,14 +1031,14 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     joining 1-row aggregates, which would plan as nested-loop
     products). Each leg inherits its source query's scale posture."""
     docs = table(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(_tokens(F.col("text"))).alias("tok"), "doc_id")
+    toks = docs.select(F.explode(tokens(F.col("text"))).alias("tok"), "doc_id")
 
     n_docs = docs.agg(
         F.lit("n_docs").alias("metric"), F.count(F.lit(1)).cast("long").alias("value")
     )
     total_tokens = docs.agg(
         F.lit("total_tokens").alias("metric"),
-        F.sum(F.size(_tokens(F.col("text")))).cast("long").alias("value"),
+        F.sum(F.size(tokens(F.col("text")))).cast("long").alias("value"),
     )
     n_dup = docs.agg(
         F.lit("n_dup_docs").alias("metric"),
@@ -1076,7 +1075,7 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_percentile_gate",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, source, len({_sql_tokens('text')}) AS n_tokens FROM documents
+      SELECT doc_id, source, len({sql_tokens('text')}) AS n_tokens FROM documents
     ), b AS (
       SELECT quantile_cont(n_tokens, 0.10) AS p10,
              quantile_cont(n_tokens, 0.90) AS p90
@@ -1104,7 +1103,7 @@ def q_quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     swaps to approx_percentile with the documented error bound."""
     docs = table(spark, sf_dir, "documents")
     t = docs.select(
-        "doc_id", "source", F.size(_tokens(F.col("text"))).alias("n_tokens")
+        "doc_id", "source", F.size(tokens(F.col("text"))).alias("n_tokens")
     )
     bounds = t.agg(
         F.expr("percentile(n_tokens, 0.10)").alias("p10"),
@@ -1133,7 +1132,7 @@ EPOCH_HEAD_CW, EPOCH_MID_CW, EPOCH_TAIL_CW = 250, 100, 40
              CASE WHEN CAST(substr(source, 4) AS INTEGER) < 5 THEN {EPOCH_HEAD_CW}
                   WHEN CAST(substr(source, 4) AS INTEGER) < 15 THEN {EPOCH_MID_CW}
                   ELSE {EPOCH_TAIL_CW} END AS cw,
-             ('0x' || substr(md5('epoch_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+             {sql_hash_u32('CAST(doc_id AS VARCHAR)', 'epoch_')}
                % 100 AS h
       FROM documents
     ), r AS (
@@ -1170,13 +1169,7 @@ def q_epoch_repeat_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(EPOCH_TAIL_CW)
     )
     h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("epoch_"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
+        hash_u32(F.col("doc_id").cast("string"), "epoch_")
         % 100
     )
     n_repeats = F.floor(cw / 100).cast("long") + F.when(h < cw % 100, 1).otherwise(0)
@@ -1199,7 +1192,7 @@ FP_MIN_SUPPORT = 5
     "frequent_token_pairs",
     oracle=f"""
     WITH t AS (
-      SELECT p_partkey, list_distinct({_sql_tokens('p_name')}) AS toks FROM part
+      SELECT p_partkey, list_distinct({sql_tokens('p_name')}) AS toks FROM part
     ), pairs AS (
       SELECT ua.tok AS tok_a, ub.tok AS tok_b
       FROM t, unnest(toks) AS ua(tok), unnest(t.toks) AS ub(tok)
@@ -1222,7 +1215,7 @@ def q_frequent_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: distinct tokens per row → within-row ordered pair explode →
     (tok_a, tok_b) hash aggregate + support filter."""
     part = table(spark, sf_dir, "part")
-    t = part.select(F.array_distinct(_tokens(F.col("p_name"))).alias("toks"))
+    t = part.select(F.array_distinct(tokens(F.col("p_name"))).alias("toks"))
     a = t.select(F.explode("toks").alias("tok_a"), "toks")
     pairs = a.select(
         "tok_a", F.explode("toks").alias("tok_b")
@@ -1238,7 +1231,7 @@ def q_frequent_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "association_rules",
     oracle=f"""
     WITH t AS (
-      SELECT p_partkey, list_distinct({_sql_tokens('p_name')}) AS toks FROM part
+      SELECT p_partkey, list_distinct({sql_tokens('p_name')}) AS toks FROM part
     ), n AS (
       SELECT CAST(count(*) AS BIGINT) AS n_rows FROM t
     ), item AS (
@@ -1272,7 +1265,7 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     small), and the 1-row total broadcast — integer floor arithmetic
     end to end."""
     part = table(spark, sf_dir, "part")
-    t = part.select(F.array_distinct(_tokens(F.col("p_name"))).alias("toks"))
+    t = part.select(F.array_distinct(tokens(F.col("p_name"))).alias("toks"))
     n = t.agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
     item = (
         t.select(F.explode("toks").alias("tok"))
@@ -1307,7 +1300,7 @@ DRIFT_TOPK = 50
 
 _DRIFT_SQL = f"""
     WITH toks AS (
-      SELECT source, unnest({_sql_tokens('text')}) AS term FROM documents
+      SELECT source, unnest({sql_tokens('text')}) AS term FROM documents
     ), tot AS (
       SELECT CAST(count(*) AS BIGINT) AS n_all FROM toks
     ), topk AS (
@@ -1363,7 +1356,7 @@ def q_source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-hint class); the screen relation is |sources|×{DRIFT_TOPK}
     regardless of corpus size."""
     docs = table(spark, sf_dir, "documents")
-    toks = docs.select("source", F.explode(_tokens(F.col("text"))).alias("term"))
+    toks = docs.select("source", F.explode(tokens(F.col("text"))).alias("term"))
     toks = toks.persist()
     tot = toks.agg(F.count(F.lit(1)).cast("long").alias("n_all"))
     topk = (
@@ -1428,7 +1421,7 @@ WPRIO_K = 64
     WITH pr AS (
       SELECT doc_id, source, CAST(n_chars AS BIGINT) AS weight,
              CAST(n_chars AS DOUBLE)
-               / (1 + {_sql_hash_u32("CAST(doc_id AS VARCHAR)", 'wprio_')})
+               / (1 + {sql_hash_u32("CAST(doc_id AS VARCHAR)", 'wprio_')})
                AS prio
       FROM documents
     )
@@ -1456,7 +1449,7 @@ def q_weighted_sample_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, at any scale.
     """
     docs = table(spark, sf_dir, "documents")
-    u = _hash_u32(F.col("doc_id").cast("string"), "wprio_")
+    u = hash_u32(F.col("doc_id").cast("string"), "wprio_")
     return (
         docs.select(
             "doc_id",
@@ -1474,9 +1467,9 @@ def q_weighted_sample_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH d AS MATERIALIZED (
       SELECT doc_id, source,
-             CAST(len({_sql_tokens('text')}) AS BIGINT)
+             CAST(len({sql_tokens('text')}) AS BIGINT)
                AS n_tokens,
-             md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
+             {sql_fp_norm()}
                AS fp
       FROM documents
     ), first_d AS (
@@ -1488,7 +1481,7 @@ def q_weighted_sample_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CASE WHEN f.first_doc = d.doc_id
                     THEN d.n_tokens ELSE 0 END) AS BIGINT)
              AS effective_tokens,
-           {_sql_bp(
+           {sql_bp(
                "sum(CASE WHEN f.first_doc = d.doc_id THEN 0 ELSE d.n_tokens END)",
                "sum(d.n_tokens)")} AS dup_token_bp
     FROM d JOIN first_d f ON d.fp = f.fp
@@ -1509,15 +1502,12 @@ def q_source_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-level hash-agg — the decontamination join shape, no
     self-join of the corpus.
     """
-    from distributed_mapreduce_spark.workload.text import _bp as _bp_t
-    from distributed_mapreduce_spark.workload.text import _tokens as _toks
-
     docs = table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
         "source",
-        F.size(_toks(F.col("text"))).cast("long").alias("n_tokens"),
-        _fp_norm().alias("fp"),
+        F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
+        fp_norm().alias("fp"),
     )
     first_d = d.groupBy("fp").agg(F.min("doc_id").alias("first_doc"))
     j = d.join(first_d, "fp")
@@ -1528,7 +1518,7 @@ def q_source_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(is_first, F.col("n_tokens")).otherwise(0))
         .cast("long")
         .alias("effective_tokens"),
-        _bp_t(
+        bp(
             F.sum(F.when(is_first, F.lit(0)).otherwise(F.col("n_tokens"))),
             F.sum("n_tokens"),
         ).alias("dup_token_bp"),
@@ -1539,16 +1529,16 @@ def q_source_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vocab_oov_rate_by_source",
     oracle=f"""
     WITH tok AS MATERIALIZED (
-      SELECT source, unnest({_sql_tokens('text')}) AS term FROM documents
+      SELECT source, unnest({sql_tokens('text')}) AS term FROM documents
     ), vocab AS MATERIALIZED (
       SELECT term FROM (
-        SELECT unnest({_sql_tokens('text')}) AS term, doc_id FROM documents
+        SELECT unnest({sql_tokens('text')}) AS term, doc_id FROM documents
       ) GROUP BY term HAVING count(DISTINCT doc_id) >= 5
     )
     SELECT t.source,
            CAST(count(*) AS BIGINT) AS n_tokens,
            CAST(count(*) FILTER (v.term IS NULL) AS BIGINT) AS oov_tokens,
-           {_sql_bp("count(*) FILTER (v.term IS NULL)", "count(*)")}
+           {sql_bp("count(*) FILTER (v.term IS NULL)", "count(*)")}
              AS oov_bp
     FROM tok t LEFT JOIN vocab v ON t.term = v.term
     GROUP BY t.source
@@ -1565,13 +1555,10 @@ def q_vocab_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized, AQE decides the join side), one left equi-join + source
     hash-agg with map-side partials.
     """
-    from distributed_mapreduce_spark.workload.text import _bp as _bp_t
-    from distributed_mapreduce_spark.workload.text import _tokens as _toks
-
     docs = table(spark, sf_dir, "documents")
-    tok = docs.select("source", F.explode(_toks(F.col("text"))).alias("term"))
+    tok = docs.select("source", F.explode(tokens(F.col("text"))).alias("term"))
     vocab = (
-        docs.select("doc_id", F.explode(_toks(F.col("text"))).alias("term"))
+        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count_distinct("doc_id").alias("df"))
         .filter(F.col("df") >= 5)
@@ -1582,7 +1569,7 @@ def q_vocab_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum(oov.cast("long")).alias("oov_tokens"),
-        _bp_t(F.sum(oov.cast("long")), F.count(F.lit(1))).alias("oov_bp"),
+        bp(F.sum(oov.cast("long")), F.count(F.lit(1))).alias("oov_bp"),
     )
 
 
@@ -1617,7 +1604,7 @@ COLL_MIN_COUNT = LM_MIN_COUNT
     FROM bg JOIN ug ua ON bg.w1 = ua.tok JOIN ug ub ON bg.w2 = ub.tok, tot
     WHERE bg.c2 >= {COLL_MIN_COUNT}
     """.format(
-        tok=_sql_tokens("text"), ng=_sql_ngrams("toks", 2)
+        tok=sql_tokens("text"), ng=sql_ngrams("toks", 2)
     ),
 )
 def q_collocation_pmi_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1646,9 +1633,9 @@ def q_collocation_pmi_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded sides), and a single-row totals relation broadcast
     (bounded-hint class)."""
     docs = table(spark, sf_dir, "documents")
-    toks = docs.select(_tokens(F.col("text")).alias("toks")).persist()
+    toks = docs.select(tokens(F.col("text")).alias("toks")).persist()
     bg = (
-        toks.select(F.explode(_ngrams(F.col("toks"), 2)).alias("gram"))
+        toks.select(F.explode(ngrams(F.col("toks"), 2)).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).cast("long").alias("c2"))
     ).persist()
@@ -1709,7 +1696,7 @@ def q_collocation_pmi_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                      // (n_tok * 10000 // tot_tok) END AS BIGINT)
              AS boost_x100
     FROM w, t
-    """.format(tok=_sql_tokens("text")),
+    """.format(tok=sql_tokens("text")),
 )
 def q_mixture_temperature_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-balanced mixture shares (the multilingual-sampling
@@ -1731,7 +1718,7 @@ def q_mixture_temperature_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (bounded-hint class), and a |sources|-row projection."""
     docs = table(spark, sf_dir, "documents")
     s = docs.select(
-        "source", F.size(_tokens(F.col("text"))).alias("ntok_doc")
+        "source", F.size(tokens(F.col("text"))).alias("ntok_doc")
     ).groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("ntok_doc").cast("long").alias("n_tok"),
@@ -1768,7 +1755,7 @@ WATERFILL_BUDGET_BP = 6000
     "mixture_waterfill_caps",
     oracle=f"""
     WITH s AS MATERIALIZED (
-      SELECT source, CAST(sum(len({_sql_tokens('text')})) AS BIGINT) AS n_tok
+      SELECT source, CAST(sum(len({sql_tokens('text')})) AS BIGINT) AS n_tok
       FROM documents GROUP BY source
     ), ranked AS MATERIALIZED (
       SELECT source, n_tok,
@@ -1830,7 +1817,7 @@ def q_mixture_waterfill_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # totals, candidates, caps) derives from it — without the cache the
     # raw-corpus explode would re-run once per reference.
     s = docs.groupBy("source").agg(
-        F.sum(F.size(_tokens(F.col("text")))).cast("long").alias("n_tok")
+        F.sum(F.size(tokens(F.col("text")))).cast("long").alias("n_tok")
     ).persist()
     w = Window.orderBy("n_tok", "source")
     ranked = s.select(
@@ -1901,8 +1888,8 @@ def _coverage_oracle() -> str:
     parts = [
         f"WITH st AS MATERIALIZED (\n"
         f"  SELECT DISTINCT source, gram AS term\n"
-        f"  FROM (SELECT source, {_sql_tokens('text')} AS toks FROM documents),\n"
-        f"       unnest({_sql_ngrams('toks', 2)}) AS u(gram)\n"
+        f"  FROM (SELECT source, {sql_tokens('text')} AS toks FROM documents),\n"
+        f"       unnest({sql_ngrams('toks', 2)}) AS u(gram)\n"
         f")"
     ]
     rows = []
@@ -1957,10 +1944,10 @@ def q_corpus_coverage_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     st = (
         # token array materialized once per row (see decontam note)
-        docs.select("source", _tokens(F.col("text")).alias("__toks"))
+        docs.select("source", tokens(F.col("text")).alias("__toks"))
         .select(
             "source",
-            F.explode(_ngrams(F.col("__toks"), 2)).alias("term"),
+            F.explode(ngrams(F.col("__toks"), 2)).alias("term"),
         )
         .distinct()
         .persist()
@@ -2080,8 +2067,8 @@ DOMAIN_CAP = 15
     oracle=f"""
     WITH scored AS MATERIALIZED (
       SELECT doc_id, source,
-             {_sql_bp(_sql_count_in(_sql_tokens('text'), STOPWORDS),
-                      f"len({_sql_tokens('text')})")} AS q_bp
+             {sql_bp(sql_count_in(sql_tokens('text'), STOPWORDS),
+                      f"len({sql_tokens('text')})")} AS q_bp
       FROM documents
     ), ranked AS (
       SELECT doc_id, source, q_bp,
@@ -2118,11 +2105,11 @@ def q_corpus_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     scored = docs.select(
         "doc_id",
         "source",
-        _bp(_count_in(toks, STOPWORDS), F.size(toks)).alias("q_bp"),
+        bp(count_in(toks, STOPWORDS), F.size(toks)).alias("q_bp"),
     )
     w = Window.partitionBy("source").orderBy(F.col("q_bp").desc(), "doc_id")
     ranked = scored.withColumn("rnk", F.row_number().over(w))

@@ -19,6 +19,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import (
+    fp_norm,
+    hash_u32,
+    sql_fp_norm,
+    sql_hash_u32,
+    sql_tokens,
+    tokens,
+)
 from distributed_mapreduce_spark.workload.registry import query, table
 
 #: MinHash parameters: k = bands * rows hash functions.
@@ -32,26 +40,10 @@ SHINGLE_W = 3
 SIMHASH_BITS = 32
 
 
-def _hash_u32(col: Column, seed: str) -> Column:
-    """Portable uint32 hash: first 8 hex chars of md5(seed || s)."""
-    return F.conv(F.substring(F.md5(F.concat(F.lit(seed), col)), 1, 8), 16, 10).cast("long")
-
-
-def _sql_hash_u32(expr: str, seed: str) -> str:
-    return f"('0x' || substr(md5('{seed}' || {expr}), 1, 8))::BIGINT"
-
-
-def _tokens(col: Column) -> Column:
-    return F.filter(F.split(col, " ", -1), lambda x: x != "")
-
-
-_SQL_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
-
-
 def shingles(col: Column, w: int = SHINGLE_W) -> Column:
     """Distinct w-word shingles of a text column (empty array if < w
     tokens)."""
-    toks = _tokens(col)
+    toks = tokens(col)
     n = F.size(toks)
     idx = F.sequence(F.lit(0), n - w)
     sh = F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, w), " "))
@@ -59,11 +51,12 @@ def shingles(col: Column, w: int = SHINGLE_W) -> Column:
 
 
 def _sql_shingles(w: int = SHINGLE_W) -> str:
+    toks = sql_tokens("text")
     # DuckDB list slices are 1-based inclusive: toks[i+1 : i+w].
     return f"""
-    CASE WHEN len({_SQL_TOKS}) >= {w}
-         THEN list_distinct(list_transform(range(0, len({_SQL_TOKS}) - {w - 1}),
-              i -> array_to_string(({_SQL_TOKS})[i + 1 : i + {w}], ' ')))
+    CASE WHEN len({toks}) >= {w}
+         THEN list_distinct(list_transform(range(0, len({toks}) - {w - 1}),
+              i -> array_to_string(({toks})[i + 1 : i + {w}], ' ')))
          ELSE [] END
     """
 
@@ -104,7 +97,7 @@ def _sql_minhash(bh_expr: str, k: int) -> str:
 
 def _sql_bh() -> str:
     """DuckDB twin of :func:`shingle_table`'s `bh` column."""
-    return f"list_distinct(list_transform({_sql_shingles()}, s -> {_sql_hash_u32('s', 'mh_')}))"
+    return f"list_distinct(list_transform({_sql_shingles()}, s -> {sql_hash_u32('s', 'mh_')}))"
 
 
 # ---------------------------------------------------------------------------
@@ -153,7 +146,7 @@ def shingle_table(docs: DataFrame) -> DataFrame:
     sh = shingles(F.col("text"))
     out = docs.select(F.col("doc_id"), sh.alias("sh")).select(
         F.col("doc_id"),
-        F.array_distinct(F.transform("sh", lambda s: _hash_u32(s, "mh_"))).alias("bh"),
+        F.array_distinct(F.transform("sh", lambda s: hash_u32(s, "mh_"))).alias("bh"),
     )
     return out.persist()
 
@@ -606,7 +599,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_simhash() -> str:
-    h = _sql_hash_u32("t.tok", "sh_")
+    h = sql_hash_u32("t.tok", "sh_")
     bit_sum = ", ".join(
         f"sum(CASE WHEN (({h} >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS s{i}"
         for i in range(SIMHASH_BITS)
@@ -616,7 +609,7 @@ def _sql_simhash() -> str:
     )
     return f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_TOKS}) AS tok FROM documents
+      SELECT doc_id, unnest({sql_tokens('text')}) AS tok FROM documents
     ), t AS (SELECT doc_id, tok FROM tok),
     bits AS (
       SELECT doc_id, {bit_sum} FROM t GROUP BY doc_id
@@ -630,8 +623,8 @@ def simhash_table(docs: DataFrame) -> DataFrame:
     md5 family), per-bit ±1 vote sum, recombine sign bits. Pure
     groupBy-aggregate — one shuffle keyed by doc_id; near-dup lookup is
     then a Hamming-ball probe over the 32-bit key."""
-    toks = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
-    h = _hash_u32(F.col("tok"), "sh_")
+    toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
+    h = hash_u32(F.col("tok"), "sh_")
     votes = toks.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -1345,28 +1338,12 @@ def q_dedup_clusters_pointer_jump(spark: SparkSession, sf_dir: str) -> DataFrame
     return connected_components_pointer_jump(pairs.select("doc_a", "doc_b"))
 
 
-def _fp_norm() -> Column:
-    """Normalization fingerprint: md5 of lowercased text with
-    non-alphanumerics collapsed and trimmed — the ONE definition shared
-    by `dedup_exact_normalized`, `er_blocking_audit`'s truth set, and
-    the governance cascade (their cross-query agreement depends on the
-    three sites staying byte-identical)."""
-    return F.md5(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "))
-    )
-
-
-_SQL_FP_NORM = (
-    "md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))"
-)
-
-
 @query(
     "dedup_exact_normalized",
-    oracle="""
+    oracle=f"""
     WITH n AS (
       SELECT doc_id,
-             md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
+             {sql_fp_norm()}
                AS fp_norm,
              md5(text) AS fp_raw
       FROM documents
@@ -1392,7 +1369,7 @@ def q_dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     n = docs.select(
-        "doc_id", _fp_norm().alias("fp_norm"), F.md5("text").alias("fp_raw")
+        "doc_id", fp_norm().alias("fp_norm"), F.md5("text").alias("fp_raw")
     )
     return n.groupBy("fp_norm").agg(
         F.count(F.lit(1)).alias("n_copies"),
@@ -1492,8 +1469,8 @@ CDC_DIV = 64
 
 _SQL_CDC_BOUNDS = (
     f"list_filter(range({CDC_GRAM}, n), i -> "
-    f"((('0x' || substr(md5('cdck_' || substr(text, i - {CDC_GRAM - 1}, "
-    f"{CDC_GRAM})), 1, 8))::BIGINT % {CDC_DIV}) = 0))"
+    f"(({sql_hash_u32(f'substr(text, i - {CDC_GRAM - 1}, {CDC_GRAM})', 'cdck_')} "
+    f"% {CDC_DIV}) = 0))"
 )
 
 
@@ -1724,8 +1701,8 @@ ER_T_POSSIBLE = 200
     WITH rec AS MATERIALIZED (
       SELECT doc_id, lang, source,
              length(text) // {ER_LEN_BUCKET} AS lenbkt,
-             len(list_filter(string_split(text, ' '), x -> x <> '')) // {ER_TOK_BUCKET} AS tokbkt,
-             COALESCE(list_filter(string_split(text, ' '), x -> x <> '')[1], '') AS firsttok
+             len({sql_tokens('text')}) // {ER_TOK_BUCKET} AS tokbkt,
+             COALESCE({sql_tokens('text')}[1], '') AS firsttok
       FROM documents
     ), pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1764,7 +1741,7 @@ def q_er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     or above the review threshold survive to output. At 100 TB the
     block key is the knob: add more fields until the largest block is
     task-sized (the EMBED_CELL_CAP discipline applies verbatim)."""
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     rec = table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
@@ -1900,7 +1877,7 @@ def q_dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH rec AS MATERIALIZED (
       SELECT doc_id, lang, length(text) // {ER_LEN_BUCKET} AS lenbkt,
-             md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
+             {sql_fp_norm()}
                AS fp_norm
       FROM documents
     ), bs AS MATERIALIZED (
@@ -1964,7 +1941,7 @@ def q_er_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         (F.length("text") / ER_LEN_BUCKET).cast("long").alias("lenbkt"),
-        _fp_norm().alias("fp_norm"),
+        fp_norm().alias("fp_norm"),
     ).persist()
     bs = rec.groupBy("lang", "lenbkt").agg(
         F.count(F.lit(1)).cast("long").alias("nb")
@@ -2220,7 +2197,7 @@ WINNOW_W = 5
 
 
 def _winnow_oracle() -> str:
-    toks = _SQL_TOKS
+    toks = sql_tokens("text")
     k, w = WINNOW_K, WINNOW_W
     # Packed key h*2^31 + pos makes the window min lexicographic in
     # (hash, pos): ties on hash select the LEFTMOST gram, identically
@@ -2232,7 +2209,7 @@ def _winnow_oracle() -> str:
       SELECT doc_id,
              CASE WHEN len({toks}) >= {k}
                   THEN list_transform(range(1, len({toks}) - {k - 1} + 1),
-                       i -> {_sql_hash_u32(f"array_to_string(({toks})[i : i + {k - 1}], ' ')", 'wn_')}
+                       i -> {sql_hash_u32(f"array_to_string(({toks})[i : i + {k - 1}], ' ')", 'wn_')}
                             * 2147483648 + i)
                   ELSE [] END AS pk
       FROM documents
@@ -2275,13 +2252,13 @@ def q_dedup_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFram
     """
     k, w = WINNOW_K, WINNOW_W
     docs = table(spark, sf_dir, "documents")
-    toked = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    toked = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     n = F.size(F.col("toks"))
     grams = F.when(
         n >= k,
         F.transform(
             F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: _hash_u32(
+            lambda i: hash_u32(
                 F.array_join(F.slice(F.col("toks"), i, k), " "), "wn_"
             )
             * F.lit(2147483648)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import hash_u32, sql_hash_u32
 from distributed_mapreduce_spark.workload.registry import (
     query,
     table,
@@ -363,7 +364,7 @@ SAMPLE_BP = {"click": 2500, "view": 1000, "purchase": 10000, "signup": 10000, "e
     oracle=f"""
     SELECT event_type, count(*) AS n_sampled
     FROM events
-    WHERE ('0x' || substr(md5('samp_' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 10000
+    WHERE {sql_hash_u32('CAST(event_id AS VARCHAR)', 'samp_')} % 10000
           < CASE event_type
               WHEN 'click' THEN {SAMPLE_BP["click"]}
               WHEN 'view' THEN {SAMPLE_BP["view"]}
@@ -381,11 +382,7 @@ def q_events_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     same row set forever, verified here by exact per-class counts."""
     ev = table(spark, sf_dir, "events")
     h = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("samp_"), F.col("event_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        hash_u32(F.col("event_id").cast("string"), "samp_")
         % 10000
     )
     bp = F.when(F.col("event_type") == "click", SAMPLE_BP["click"]).when(
@@ -839,7 +836,7 @@ def q_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("string"),
         F.unix_micros(F.col("ts")).cast("string"),
     )
-    h = F.conv(F.substring(F.md5(enc), 1, 8), 16, 10).cast("long")
+    h = hash_u32(enc)
     return ev.groupBy(F.col("event_type").alias("partition_key")).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum(h).cast("long").alias("checksum"),

@@ -20,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import sql_tokens, tokens
 from distributed_mapreduce_spark.workload.registry import query, table
-from distributed_mapreduce_spark.workload.text import _sql_tokens, _tokens
 
 #: Hash groups for the local-frontier phase.
 SKYLINE_GROUPS = 16
@@ -108,7 +108,7 @@ def q_pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_keep_best",
     oracle=f"""
     WITH scored AS (
-      SELECT doc_id, md5(text) AS fp, len({_sql_tokens('text')}) AS n_tokens
+      SELECT doc_id, md5(text) AS fp, len({sql_tokens('text')}) AS n_tokens
       FROM documents
     ), ranked AS (
       SELECT doc_id, fp, n_tokens,
@@ -135,7 +135,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.select(
         "doc_id",
         F.md5("text").alias("fp"),
-        F.size(_tokens(F.col("text"))).alias("n_tokens"),
+        F.size(tokens(F.col("text"))).alias("n_tokens"),
     )
     w = Window.partitionBy("fp").orderBy(F.desc("n_tokens"), F.asc("doc_id"))
     wc = Window.partitionBy("fp")

@@ -44,10 +44,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.dedup import _hash_u32, _sql_hash_u32
-from distributed_mapreduce_spark.workload.quality import _ngrams, _sql_ngrams
+from distributed_mapreduce_spark.functions import (
+    hash_u32,
+    ngrams,
+    sql_hash_u32,
+    sql_ngrams,
+    sql_tokens,
+    tokens,
+)
 from distributed_mapreduce_spark.workload.registry import query, table
-from distributed_mapreduce_spark.workload.text import _sql_tokens, _tokens
 
 #: Hashed-feature dimensionality of both unigram models.
 IR_DIM = 256
@@ -64,13 +69,13 @@ _SQL_TARGET_IN = "(" + ", ".join(f"'{s}'" for s in IR_TARGET_SOURCES) + ")"
 
 def _grams(col) -> F.Column:
     """Unigrams + bigrams of a text column (the DSIR feature space)."""
-    toks = _tokens(col)
-    return F.concat(toks, _ngrams(toks, 2))
+    toks = tokens(col)
+    return F.concat(toks, ngrams(toks, 2))
 
 
 def _sql_grams(c: str) -> str:
-    toks = _sql_tokens(c)
-    return f"list_concat({toks}, {_sql_ngrams(toks, 2)})"
+    toks = sql_tokens(c)
+    return f"list_concat({toks}, {sql_ngrams(toks, 2)})"
 
 
 #: Shared oracle prelude: exploded bucket rows, the two bucket models,
@@ -80,7 +85,7 @@ def _sql_grams(c: str) -> str:
 _SQL_IR_CORE = f"""
     WITH ex AS MATERIALIZED (
       SELECT doc_id, source,
-             {_sql_hash_u32('g', IR_SEED)} % {IR_DIM} AS b
+             {sql_hash_u32('g', IR_SEED)} % {IR_DIM} AS b
       FROM (SELECT doc_id, source, unnest({_sql_grams('text')}) AS g
             FROM documents)
     ), bt AS MATERIALIZED (
@@ -117,23 +122,23 @@ def _ex_df(docs: DataFrame) -> DataFrame:
     """(doc_id, source, b): one row per gram occurrence, bucketed.
 
     The token array is materialized in its own projection first:
-    `_grams` references it ~6x (concat + _ngrams' element_at/size
+    `_grams` references it ~6x (concat + ngrams' element_at/size
     refs, some inside non-codegen HOF lambdas), so an inlined
     tokenizer expression would re-run per reference — measured ~4x
     whole-query cost on `dsir_importance_weights`."""
     return (
-        docs.select("doc_id", "source", _tokens(F.col("text")).alias("__toks"))
+        docs.select("doc_id", "source", tokens(F.col("text")).alias("__toks"))
         .select(
             "doc_id",
             "source",
             F.explode(
-                F.concat(F.col("__toks"), _ngrams(F.col("__toks"), 2))
+                F.concat(F.col("__toks"), ngrams(F.col("__toks"), 2))
             ).alias("g"),
         )
         .select(
             "doc_id",
             "source",
-            (_hash_u32(F.col("g"), IR_SEED) % IR_DIM).alias("b"),
+            (hash_u32(F.col("g"), IR_SEED) % IR_DIM).alias("b"),
         )
     )
 

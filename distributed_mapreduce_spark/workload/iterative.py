@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import hash_u32, sql_hash_u32
 from distributed_mapreduce_spark.workload.registry import query, table
 
 #: Initial mass per node, in micro-units.
@@ -429,7 +430,7 @@ def _mis_prio_sql(u: str) -> str:
     # (unique per node even on hash collisions) that fits int64 for
     # node ids < 2^32.
     return (
-        f"((('0x' || substr(md5('mis_' || CAST({u} AS VARCHAR)), 1, 8))::BIGINT >> 1)"
+        f"(({sql_hash_u32(f'CAST({u} AS VARCHAR)', 'mis_')} >> 1)"
         f" * 4294967296 + {u})"
     )
 
@@ -546,10 +547,8 @@ MATCH_ROUNDS = 3
 
 
 def _match_prio_sql() -> str:
-    return (
-        "(('0x' || substr(md5('me_' || CAST(u AS VARCHAR) || '_' ||"
-        " CAST(v AS VARCHAR)), 1, 8))::BIGINT)"
-    )
+    edge = "CAST(u AS VARCHAR) || '_' || CAST(v AS VARCHAR)"
+    return f"({sql_hash_u32(edge, 'me_')})"
 
 
 def _matching_oracle(rounds: int) -> str:
@@ -629,24 +628,14 @@ def q_graph_greedy_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = adj.filter(F.col("u") < F.col("v")).select(
         "u",
         "v",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("me_"),
-                        F.col("u").cast("string"),
-                        F.lit("_"),
-                        F.col("v").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
+        hash_u32(
+            F.concat(
+                F.lit("me_"),
+                F.col("u").cast("string"),
+                F.lit("_"),
+                F.col("v").cast("string"),
+            )
+        ).alias("h"),
     )
     live = edges.localCheckpoint()
     readouts = []

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import hash_u32, sql_hash_u32
 from distributed_mapreduce_spark.workload.registry import query, table
 
 #: Ordered funnel stages over `events.event_type`.
@@ -285,10 +286,10 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ab_split_metrics",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
       SELECT user_id, event_type, value,
-             CASE WHEN ('0x' || substr(md5('ab_' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 = 0
+             CASE WHEN {sql_hash_u32('CAST(user_id AS VARCHAR)', 'ab_')} % 2 = 0
                   THEN 'control' ELSE 'treatment' END AS arm
       FROM events
     )
@@ -317,11 +318,7 @@ def q_ab_split_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     event ever leaves its partition unaggregated."""
     ev = table(spark, sf_dir, "events")
     arm = F.when(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("ab_"), F.col("user_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        hash_u32(F.col("user_id").cast("string"), "ab_")
         % 2
         == 0,
         "control",

@@ -17,12 +17,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.functions.strings import pct_of_total_str, pct_of_total_sql
+from distributed_mapreduce_spark.functions.strings import (
+    pct_of_total_sql,
+    pct_of_total_str,
+    sql_normalize_empty,
+    sql_trim_ws,
+)
 from distributed_mapreduce_spark.maplejuice import juice, maple
 from distributed_mapreduce_spark.workload.registry import query, table
-
-_T = "regexp_replace({c}, '^[ \t\n\r\f]+|[ \t\n\r\f]+$', '', 'g')"
-_NORM = "CASE WHEN {c} IS NULL OR " + _T + " = '' THEN 'empty' ELSE " + _T + " END"
 
 
 def _maple_fn(pdf: pd.DataFrame) -> Iterator[tuple[str, str]]:
@@ -43,9 +45,9 @@ def _juice_fn(key: str, pdf: pd.DataFrame) -> pd.DataFrame:
     "maplejuice_flagship",
     oracle=f"""
     WITH g AS (
-      SELECT {_NORM.format(c='o_orderpriority')} AS priority, count(*) AS cnt
+      SELECT {sql_normalize_empty('o_orderpriority')} AS priority, count(*) AS cnt
       FROM orders
-      WHERE regexp_replace(o_orderstatus, '^[ \t\n\r\f]+|[ \t\n\r\f]+$', '', 'g') = 'F'
+      WHERE {sql_trim_ws('o_orderstatus')} = 'F'
       GROUP BY 1
     )
     SELECT priority, cnt, {pct_of_total_sql('cnt', 'sum(cnt) OVER ()')} AS pct

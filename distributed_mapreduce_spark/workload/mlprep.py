@@ -38,9 +38,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.dedup import (
-    _hash_u32,
-    _sql_hash_u32,
+from distributed_mapreduce_spark.functions import (
+    hash_u32,
+    sql_hash_u32,
+    sql_tokens,
+    tokens,
 )
 from distributed_mapreduce_spark.workload.registry import query, table
 
@@ -129,9 +131,9 @@ def q_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH assigned AS MATERIALIZED (
       SELECT user_id, event_id,
              CASE
-               WHEN {_sql_hash_u32("CAST(user_id AS VARCHAR)", "gs")}
+               WHEN {sql_hash_u32("CAST(user_id AS VARCHAR)", "gs")}
                     % {SPLIT_BUCKETS} < {SPLIT_TRAIN_LT} THEN 'train'
-               WHEN {_sql_hash_u32("CAST(user_id AS VARCHAR)", "gs")}
+               WHEN {sql_hash_u32("CAST(user_id AS VARCHAR)", "gs")}
                     % {SPLIT_BUCKETS} < {SPLIT_VAL_LT} THEN 'val'
                ELSE 'test'
              END AS split
@@ -165,8 +167,7 @@ def q_group_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: split is a pure md5 row expression (no shuffle); per-split
     stats are one hash-aggregate with a distinct-user combine; the
     audit aggregates (user, split) pairs — bounded by |users|·3."""
-    # canonical portable hash (workload/dedup.py:_hash_u32)
-    bucket = _hash_u32(F.col("user_id").cast("string"), "gs") % SPLIT_BUCKETS
+    bucket = hash_u32(F.col("user_id").cast("string"), "gs") % SPLIT_BUCKETS
     assigned = table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -211,7 +212,7 @@ KFOLD_K = 5
     oracle=f"""
     WITH assigned AS MATERIALIZED (
       SELECT o_orderkey, o_custkey,
-             CAST({_sql_hash_u32("CAST(o_custkey AS VARCHAR)", "kf")}
+             CAST({sql_hash_u32("CAST(o_custkey AS VARCHAR)", "kf")}
                   % {KFOLD_K} AS INTEGER) AS fold,
              CASE WHEN o_totalprice > {TE_PRICE_CUT} THEN 1 ELSE 0 END AS y
       FROM orders
@@ -245,7 +246,7 @@ def q_mlprep_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-entity combine; the leakage audit aggregates ≤ |customers|
     (customer, fold) pairs; the 1-row audit relation attaches by
     broadcast. Same scale posture as `group_split_audit`."""
-    bucket = _hash_u32(F.col("o_custkey").cast("string"), "kf") % KFOLD_K
+    bucket = hash_u32(F.col("o_custkey").cast("string"), "kf") % KFOLD_K
     assigned = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -280,13 +281,13 @@ FH_DIM = 1024
     WITH toks AS (
       SELECT u.tok AS token
       FROM documents,
-           unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS u(tok)
+           unnest({sql_tokens('text')}) AS u(tok)
     ), tc AS MATERIALIZED (
       SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY 1
     ), hashed AS MATERIALIZED (
       SELECT token, cnt,
-             {_sql_hash_u32('token', 'fh_')} % {FH_DIM} AS bucket,
-             CASE WHEN ({_sql_hash_u32('token', 'fs_')} % 2) = 0
+             {sql_hash_u32('token', 'fh_')} % {FH_DIM} AS bucket,
+             CASE WHEN ({sql_hash_u32('token', 'fs_')} % 2) = 0
                   THEN 1 ELSE -1 END AS sgn
       FROM tc
     ), buckets AS MATERIALIZED (
@@ -325,15 +326,15 @@ def q_mlprep_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine does the heavy lifting."""
     toks = table(spark, sf_dir, "documents").select(
         F.explode(
-            F.filter(F.split(F.col("text"), " ", -1), lambda x: x != "")
+            tokens(F.col("text"))
         ).alias("token")
     )
     tc = toks.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     hashed = tc.select(
         "token",
         "cnt",
-        (_hash_u32(F.col("token"), "fh_") % FH_DIM).alias("bucket"),
-        F.when(_hash_u32(F.col("token"), "fs_") % 2 == 0, 1)
+        (hash_u32(F.col("token"), "fh_") % FH_DIM).alias("bucket"),
+        F.when(hash_u32(F.col("token"), "fs_") % 2 == 0, 1)
         .otherwise(-1)
         .alias("sgn"),
     )
@@ -524,7 +525,7 @@ NEG_K = 4
       WHERE doc_id % {NEG_ANCHOR_MOD} = 0
     ), scored AS (
       SELECT a.anchor_id, d.doc_id AS neg_id,
-             {_sql_hash_u32("CAST(a.anchor_id AS VARCHAR) || '_' || CAST(d.doc_id AS VARCHAR)", "neg")} AS h
+             {sql_hash_u32("CAST(a.anchor_id AS VARCHAR) || '_' || CAST(d.doc_id AS VARCHAR)", "neg")} AS h
       FROM anch a JOIN documents d ON d.source <> a.a_source
     )
     SELECT anchor_id, neg_id, h, rnk FROM (
@@ -558,7 +559,7 @@ def q_contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "anchor_id",
         F.col("doc_id").alias("neg_id"),
-        _hash_u32(
+        hash_u32(
             F.concat_ws("_", F.col("anchor_id"), F.col("doc_id")), "neg"
         ).alias("h"),
     )
@@ -573,7 +574,7 @@ def q_contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _split_case_sql(key: str) -> str:
     """train/val/test CASE over the md5 bucket of `key` (same geometry
     as `group_split_audit`)."""
-    h = _sql_hash_u32(f"CAST({key} AS VARCHAR)", "cs")
+    h = sql_hash_u32(f"CAST({key} AS VARCHAR)", "cs")
     return f"""CASE
       WHEN {h} % {SPLIT_BUCKETS} < {SPLIT_TRAIN_LT} THEN 'train'
       WHEN {h} % {SPLIT_BUCKETS} < {SPLIT_VAL_LT} THEN 'val'
@@ -655,7 +656,7 @@ def q_split_cluster_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b"
     )
     labels = connected_components(pairs)
-    bucket = _hash_u32(F.col("cluster_id").cast("string"), "cs") % SPLIT_BUCKETS
+    bucket = hash_u32(F.col("cluster_id").cast("string"), "cs") % SPLIT_BUCKETS
     assigned = (
         docs.select("doc_id")
         .join(labels, "doc_id", "left")
@@ -802,14 +803,11 @@ def q_split_apportion_hamilton(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Gini-gain feature ranking (exact-rational decision-tree split scores).
 
-_GG_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
-
-
 @query(
     "feature_gini_gain",
     oracle=f"""
     WITH pres AS MATERIALIZED (
-      SELECT DISTINCT doc_id, source, unnest(list_distinct({_GG_TOKS})) AS tok
+      SELECT DISTINCT doc_id, source, unnest(list_distinct({sql_tokens('text')})) AS tok
       FROM documents
     ),
     parent AS MATERIALIZED (
@@ -875,7 +873,7 @@ def q_feature_gini_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(
             F.array_distinct(
-                F.filter(F.split(F.col("text"), " ", -1), lambda x: x != "")
+                tokens(F.col("text"))
             )
         ).alias("tok"),
     ).distinct()

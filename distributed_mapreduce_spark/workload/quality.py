@@ -29,20 +29,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import (
+    bp,
+    count_in,
+    ngrams,
+    sql_bp,
+    sql_count_in,
+    sql_ngrams,
+    sql_tokens,
+    tokens,
+)
 from distributed_mapreduce_spark.workload.registry import (
     query,
     table,
     wide_shuffle_parts,
 )
-from distributed_mapreduce_spark.workload.text import (
-    STOPWORDS,
-    _bp,
-    _count_in,
-    _sql_bp,
-    _sql_count_in,
-    _sql_tokens,
-    _tokens,
-)
+from distributed_mapreduce_spark.workload.text import STOPWORDS
 
 #: Minimum document frequency for a token to enter the vocabulary.
 VOCAB_MIN_DF = 5
@@ -57,53 +59,15 @@ IDF_SCALE = 1000
 TFIDF_TOP_K = 3
 
 
-def _ngrams(toks, n: int):
-    """1-indexed n-gram strings of a token array (JVM-side); empty
-    array when the document has fewer than ``n`` tokens (guarded
-    because a short array would make the slice length negative).
-
-    Formulated as ``zip_with`` over ``n`` aligned slices — every
-    reference to ``toks`` sits OUTSIDE the lambda bodies. The earlier
-    ``transform(sequence(...), i -> element_at(toks, i+j))`` shape
-    referenced ``toks`` inside the lambda, and higher-order functions
-    are interpreted (no codegen, no common-subexpression
-    elimination), so a caller passing an inline tokenizer expression
-    re-ran the tokenizer PER ELEMENT — measured ~4x whole-query cost
-    on the gram-heavy families. Here an inline expression costs at
-    most ~2n+1 per-row evaluations, and a materialized column costs
-    nothing. Tokens are non-empty and non-null, so ``concat`` with a
-    literal space is exactly ``concat_ws``."""
-    length = F.size(toks) - (n - 1)
-    grams = F.slice(toks, 1, length)
-    for j in range(1, n):
-        grams = F.zip_with(
-            grams,
-            F.slice(toks, 1 + j, length),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def _sql_ngrams(toks: str, n: int) -> str:
-    parts = " || ' ' || ".join(f"{toks}[i+{j}]" for j in range(n))
-    return (
-        f"CASE WHEN len({toks}) >= {n} THEN "
-        f"list_transform(generate_series(1, len({toks})-{n - 1}), i -> {parts}) "
-        f"ELSE CAST([] AS VARCHAR[]) END"
-    )
-
-
 @query(
     "quality_repetition",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents
+      SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
     ), g AS (
       SELECT doc_id,
-             {_sql_ngrams('toks', 3)} AS tri,
-             {_sql_ngrams('toks', 2)} AS bi
+             {sql_ngrams('toks', 3)} AS tri,
+             {sql_ngrams('toks', 2)} AS bi
       FROM t
     ), bg AS (
       SELECT doc_id, b AS gram, count(*) AS cnt
@@ -116,9 +80,9 @@ def _sql_ngrams(toks: str, n: int) -> str:
     SELECT g.doc_id,
            CAST(len(tri) AS INTEGER) AS tri_total,
            CAST(len(list_distinct(tri)) AS INTEGER) AS tri_distinct,
-           {_sql_bp('len(tri) - len(list_distinct(tri))', 'len(tri)')} AS dup_tri_bp,
+           {sql_bp('len(tri) - len(list_distinct(tri))', 'len(tri)')} AS dup_tri_bp,
            coalesce(ba.top_bigram_n, 0) AS top_bigram_n,
-           {_sql_bp('coalesce(ba.top_bigram_n, 0)', 'coalesce(ba.bi_total, 0)')}
+           {sql_bp('coalesce(ba.top_bigram_n, 0)', 'coalesce(ba.bi_total, 0)')}
              AS top_bigram_bp
     FROM g LEFT JOIN ba ON g.doc_id = ba.doc_id
     """,
@@ -142,16 +106,16 @@ def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     tri_stats = docs.select(
-        "doc_id", _ngrams(toks, 3).alias("tri")
+        "doc_id", ngrams(toks, 3).alias("tri")
     ).select(
         "doc_id",
         F.size("tri").alias("tri_total"),
         F.size(F.array_distinct("tri")).alias("tri_distinct"),
     )
     bi_stats = (
-        docs.select("doc_id", F.explode(_ngrams(toks, 2)).alias("gram"))
+        docs.select("doc_id", F.explode(ngrams(toks, 2)).alias("gram"))
         .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .groupBy("doc_id")
@@ -188,7 +152,7 @@ _VOCAB_SQL = f"""
            CAST(count(DISTINCT doc_id) AS BIGINT) AS df,
            CAST(row_number() OVER (ORDER BY count(*) DESC, token) AS BIGINT) AS vocab_id
     FROM (SELECT doc_id, tok AS token
-          FROM (SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents),
+          FROM (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents),
                unnest(toks) AS u(tok))
     GROUP BY token
     HAVING count(DISTINCT doc_id) >= {VOCAB_MIN_DF}
@@ -197,7 +161,7 @@ _VOCAB_SQL = f"""
 
 def _vocab_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("token"))
+    toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
     # Input-scaled width for the token exchange (x1000 slope was 1.04
     # at the 32-part default, SCALING_r08): hash by `token` — a subset
     # of both aggregation keys the distinct-count plan shuffles on
@@ -242,7 +206,7 @@ def q_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vocab_encode",
     oracle=f"""
     WITH vocab AS ({_VOCAB_SQL}),
-    t AS (SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents),
+    t AS (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents),
     ex AS (
       SELECT doc_id, i AS pos, toks[i] AS token
       FROM t, unnest(generate_series(1, least(len(toks), {ENCODE_LEN}))) AS u(i)
@@ -268,7 +232,7 @@ def q_vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     vocab = _vocab_df(spark, sf_dir).select("token", "vocab_id")
     prefix = docs.select(
-        "doc_id", F.slice(_tokens(F.col("text")), 1, ENCODE_LEN).alias("toks")
+        "doc_id", F.slice(tokens(F.col("text")), 1, ENCODE_LEN).alias("toks")
     )
     ex = prefix.select(
         "doc_id", F.posexplode("toks").alias("pos0", "token")
@@ -288,7 +252,7 @@ def q_vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok AS (
       SELECT doc_id, tok AS term
-      FROM (SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents),
+      FROM (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents),
            unnest(toks) AS u(tok)
     ), tf AS (
       SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2
@@ -319,7 +283,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast cross-join (never a global window over raw rows); the
     per-doc ranking window is keyed by doc_id — fully partitioned."""
     docs = table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("term"))
+    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -350,7 +314,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tf AS (
       SELECT doc_id, tok AS term, CAST(count(*) AS BIGINT) AS tf
-      FROM (SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents),
+      FROM (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents),
            unnest(toks) AS u(tok)
       GROUP BY 1, 2
     )
@@ -373,7 +337,7 @@ def q_text_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     all integer arithmetic."""
     docs = table(spark, sf_dir, "documents")
     tf = (
-        docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("term"))
+        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -409,7 +373,7 @@ def _band_case_sql(rank: str) -> str:
     oracle=f"""
     WITH counts AS (
       SELECT tok, CAST(count(*) AS BIGINT) AS tf
-      FROM (SELECT unnest({_sql_tokens('text')}) AS tok FROM documents)
+      FROM (SELECT unnest({sql_tokens('text')}) AS tok FROM documents)
       GROUP BY tok
     ), ranked AS (
       SELECT tf, row_number() OVER (ORDER BY tf DESC, tok) AS rank
@@ -436,7 +400,7 @@ def q_zipf_rank_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(_tokens(F.col("text"))).alias("tok"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -464,7 +428,7 @@ COVERAGE_KS = (100, 500, 2000)
     oracle=f"""
     WITH counts AS (
       SELECT tok, CAST(count(*) AS BIGINT) AS tf
-      FROM (SELECT unnest({_sql_tokens('text')}) AS tok FROM documents)
+      FROM (SELECT unnest({sql_tokens('text')}) AS tok FROM documents)
       GROUP BY tok
     ), ranked AS (
       SELECT tf, row_number() OVER (ORDER BY tf DESC, tok) AS rank
@@ -495,7 +459,7 @@ def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(_tokens(F.col("text"))).alias("tok"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -527,10 +491,10 @@ CURRICULUM_PHASES = 4
 
 _CURRICULUM_SQL = f"""
     WITH t AS (
-      SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents
+      SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
     ), s AS (
       SELECT doc_id,
-             {_sql_bp(_sql_count_in('toks', STOPWORDS), 'len(toks)')} AS score
+             {sql_bp(sql_count_in('toks', STOPWORDS), 'len(toks)')} AS score
       FROM t
     ), r AS (
       SELECT doc_id, score,
@@ -562,9 +526,9 @@ def q_curriculum_phase_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_mapreduce_spark.operators.partitioning import global_rank
 
     docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     scored = docs.select(
-        "doc_id", _bp(_count_in(toks, STOPWORDS), F.size(toks)).alias("score")
+        "doc_id", bp(count_in(toks, STOPWORDS), F.size(toks)).alias("score")
     )
     ranked = global_rank(
         scored,
@@ -589,7 +553,7 @@ def q_curriculum_phase_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH g AS MATERIALIZED (
       SELECT DISTINCT doc_id, gram FROM (
         SELECT doc_id,
-               unnest({_sql_ngrams(_sql_tokens('text'), 3)}) AS gram
+               unnest({sql_ngrams(sql_tokens('text'), 3)}) AS gram
         FROM documents
       )
     ), first_seen AS MATERIALIZED (
@@ -599,7 +563,7 @@ def q_curriculum_phase_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_distinct_tri,
            CAST(count(*) FILTER (f.first_doc = g.doc_id) AS BIGINT)
              AS n_novel_tri,
-           {_sql_bp('count(*) FILTER (f.first_doc = g.doc_id)', 'count(*)')}
+           {sql_bp('count(*) FILTER (f.first_doc = g.doc_id)', 'count(*)')}
              AS novelty_bp
     FROM g JOIN first_seen f ON g.gram = f.gram
     GROUP BY g.doc_id
@@ -622,14 +586,14 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     g = (
         docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-        # materialize the token array in its own projection: _ngrams
+        # materialize the token array in its own projection: ngrams
         # references it ~5x (and inside a HOF lambda), and higher-order
         # functions don't codegen, so an inlined split+filter would
         # re-tokenize per reference instead of once per row
-        .select("doc_id", _tokens(F.col("text")).alias("__toks"))
+        .select("doc_id", tokens(F.col("text")).alias("__toks"))
         .select(
             "doc_id",
-            F.explode(_ngrams(F.col("__toks"), 3)).alias("gram"),
+            F.explode(ngrams(F.col("__toks"), 3)).alias("gram"),
         )
     )
     # Input-scaled width for the gram exchanges (x1000 slope 2.07 at
@@ -659,7 +623,7 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("first_doc") == F.col("doc_id")).cast("long")).alias(
                 "n_novel_tri"
             ),
-            _bp(
+            bp(
                 F.sum((F.col("first_doc") == F.col("doc_id")).cast("long")),
                 F.count(F.lit(1)),
             ).alias("novelty_bp"),
@@ -672,7 +636,7 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT doc_id, lang,
-             CAST(len({_sql_tokens('text')}) AS BIGINT) AS n_tokens
+             CAST(len({sql_tokens('text')}) AS BIGINT) AS n_tokens
       FROM documents
     ), r AS (
       SELECT lang, n_tokens,
@@ -703,7 +667,7 @@ def q_quality_by_language(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     t = docs.select(
-        "doc_id", "lang", F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens")
+        "doc_id", "lang", F.size(tokens(F.col("text"))).cast("long").alias("n_tokens")
     )
     from pyspark.sql import Window as W
 
@@ -734,9 +698,9 @@ RANK_BLEND_TOP = 10
     oracle=f"""
     WITH sig AS MATERIALIZED (
       SELECT doc_id,
-             {_sql_bp(_sql_count_in(_sql_tokens('text'), STOPWORDS),
-                      f"len({_sql_tokens('text')})")} AS stop_bp,
-             {_sql_bp("length(text) - length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))",
+             {sql_bp(sql_count_in(sql_tokens('text'), STOPWORDS),
+                      f"len({sql_tokens('text')})")} AS stop_bp,
+             {sql_bp("length(text) - length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))",
                       'length(text)')} AS punct_bp
       FROM documents
     ), ranked AS (
@@ -772,13 +736,13 @@ def q_quality_rank_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_mapreduce_spark.operators.partitioning import global_rank
 
     docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     n_chars = F.length(F.col("text"))
     punct = n_chars - F.length(F.regexp_replace(F.col("text"), "[a-z0-9 ]", ""))
     sig = docs.select(
         "doc_id",
-        _bp(_count_in(toks, STOPWORDS), F.size(toks)).alias("stop_bp"),
-        _bp(punct, n_chars).alias("punct_bp"),
+        bp(count_in(toks, STOPWORDS), F.size(toks)).alias("stop_bp"),
+        bp(punct, n_chars).alias("punct_bp"),
     )
     r1 = global_rank(
         sig, [F.col("stop_bp").desc(), F.col("doc_id")], rank_col="r_stop"
@@ -842,7 +806,7 @@ _SQL_RAKE_STOPS = ", ".join(f"'{s}'" for s in STOPWORDS)
            min(score_e3) AS score_e3
     FROM pscore GROUP BY phrase
     ORDER BY score_e3 DESC, phrase LIMIT {RAKE_TOP_K}
-    """.format(toks=_sql_tokens("text")),
+    """.format(toks=sql_tokens("text")),
 )
 def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010): candidate phrases
@@ -867,7 +831,7 @@ def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     window."""
     docs = table(spark, sf_dir, "documents")
     tk = docs.select(
-        "doc_id", F.posexplode(_tokens(F.col("text"))).alias("pos", "tok")
+        "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "tok")
     )
     wd = Window.partitionBy("doc_id").orderBy("pos")
     wrun = Window.partitionBy("doc_id", "grp")
@@ -942,7 +906,7 @@ BURST_MIN_DF = 200
                   // (CAST(s_x AS HUGEINT) * (n_docs - 1))
              AS BIGINT) AS vmr_e6
     FROM stats CROSS JOIN n
-    """.format(toks=_sql_tokens("text")),
+    """.format(toks=sql_tokens("text")),
 )
 def q_text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term burstiness (Church & Gale's dispersion test): the
@@ -962,7 +926,7 @@ def q_text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     n = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     tf = (
-        docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
+        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )

@@ -17,6 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import (
+    revenue,
+    sql_revenue,
+    sql_tokens,
+    tokens,
+)
 from distributed_mapreduce_spark.workload.registry import query, table
 
 #: Q3-style cutoff: orders placed before / shipped after this instant.
@@ -28,27 +34,11 @@ MOVING_RANGE_S = 30 * 24 * 3600
 
 _DEC = "decimal(18,2)"
 
-#: DuckDB token-array twin (same as workload.text._sql_tokens('text')).
-_SQL_TOKS_REL = "list_filter(string_split(text, ' '), x -> x <> '')"
-
-
-def _revenue() -> F.Column:
-    price = F.col("l_extendedprice").cast(_DEC)
-    disc = F.col("l_discount").cast(_DEC)
-    return price * (F.lit(1).cast(_DEC) - disc)
-
-
-_SQL_REVENUE = (
-    "CAST(l_extendedprice AS DECIMAL(18,2))"
-    " * (1 - CAST(l_discount AS DECIMAL(18,2)))"
-)
-
-
 @query(
     "tpch_q3_shipping",
     oracle=f"""
     SELECT l_orderkey,
-           CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS revenue,
+           CAST(sum({sql_revenue()}) AS DECIMAL(30,4)) AS revenue,
            o_orderdate, o_orderpriority
     FROM customer
     JOIN orders ON c_custkey = o_custkey
@@ -83,7 +73,7 @@ def q_tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate") > F.lit(Q3_CUT).cast("timestamp")
     )
     rev_per_order = li.groupBy("l_orderkey").agg(
-        F.sum(_revenue()).cast("decimal(30,4)").alias("revenue")
+        F.sum(revenue()).cast("decimal(30,4)").alias("revenue")
     )
     j = (
         rev_per_order.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -100,7 +90,7 @@ def q_tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tpch_q5_region_volume",
     oracle=f"""
     SELECT n_name,
-           CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS revenue
+           CAST(sum({sql_revenue()}) AS DECIMAL(30,4)) AS revenue
     FROM customer
     JOIN orders ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -145,7 +135,7 @@ def q_tpch_q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
     )
     return df.groupBy("n_name").agg(
-        F.sum(_revenue()).cast("decimal(30,4)").alias("revenue")
+        F.sum(revenue()).cast("decimal(30,4)").alias("revenue")
     )
 
 
@@ -398,11 +388,11 @@ def q_monthly_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tpch_q14_promo",
     oracle=f"""
-    SELECT CAST(sum(CASE WHEN p_type = 'PROMO' THEN {_SQL_REVENUE} ELSE 0 END)
+    SELECT CAST(sum(CASE WHEN p_type = 'PROMO' THEN {sql_revenue()} ELSE 0 END)
                 AS DECIMAL(30,4)) AS promo_revenue,
-           CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS total_revenue,
-           CAST(floor(sum(CASE WHEN p_type = 'PROMO' THEN {_SQL_REVENUE} ELSE 0 END)
-                      * 10000.0 / sum({_SQL_REVENUE})) AS BIGINT) AS promo_bp
+           CAST(sum({sql_revenue()}) AS DECIMAL(30,4)) AS total_revenue,
+           CAST(floor(sum(CASE WHEN p_type = 'PROMO' THEN {sql_revenue()} ELSE 0 END)
+                      * 10000.0 / sum({sql_revenue()})) AS BIGINT) AS promo_bp
     FROM lineitem JOIN part ON l_partkey = p_partkey
     """,
 )
@@ -414,7 +404,7 @@ def q_tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
     fits and shuffle-joins beyond that."""
     li = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = _revenue()
+    rev = revenue()
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast(_DEC))
     agg = (
         li.join(part, F.col("l_partkey") == F.col("p_partkey"))
@@ -433,7 +423,7 @@ def q_tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tpch_q19_disjunctive",
     oracle=f"""
-    SELECT CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS revenue,
+    SELECT CAST(sum({sql_revenue()}) AS DECIMAL(30,4)) AS revenue,
            count(*) AS n_lines
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
@@ -462,7 +452,7 @@ def q_tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
         | ((brand == "Brand#3") & size.between(26, 50) & qty.between(20, 40))
     )
     return j.filter(cond).agg(
-        F.sum(_revenue()).cast("decimal(30,4)").alias("revenue"),
+        F.sum(revenue()).cast("decimal(30,4)").alias("revenue"),
         F.count(F.lit(1)).alias("n_lines"),
     )
 
@@ -673,7 +663,7 @@ def q_join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     "array_functions_suite",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKS_REL} AS toks FROM documents
+      SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
     )
     SELECT doc_id,
            toks[1] AS first_tok,
@@ -691,7 +681,7 @@ def q_array_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the token arrays (SURVEY §2.10: the reference has no array
     functions at all)."""
     docs = table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), " ", -1), lambda x: x != "")
+    toks = tokens(F.col("text"))
     t = docs.select("doc_id", toks.alias("toks"))
     return t.select(
         "doc_id",
@@ -909,7 +899,7 @@ def q_map_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tpch_q10_returned_items",
     oracle=f"""
     SELECT c_custkey, c_name,
-           CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS revenue,
+           CAST(sum({sql_revenue()}) AS DECIMAL(30,4)) AS revenue,
            n_name
     FROM customer
     JOIN orders ON c_custkey = o_custkey
@@ -938,7 +928,7 @@ def q_tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
     )
     agg = j.groupBy("c_custkey", "c_name", "n_name").agg(
-        F.sum(_revenue()).cast("decimal(30,4)").alias("revenue")
+        F.sum(revenue()).cast("decimal(30,4)").alias("revenue")
     )
     return (
         agg.orderBy(F.col("revenue").desc(), F.col("c_custkey"))

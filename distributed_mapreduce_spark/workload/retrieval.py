@@ -47,20 +47,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.dedup import (
-    _hash_u32,
-    _sql_hash_u32,
+from distributed_mapreduce_spark.functions import (
+    hash_u32,
+    ngrams,
+    sql_hash_u32,
+    sql_ngrams,
+    sql_tokens,
+    tokens,
 )
 from distributed_mapreduce_spark.workload.registry import query, table
 from distributed_mapreduce_spark.workload.similarity import (
     _sql_cos_u,
     cosine_u,
 )
-from distributed_mapreduce_spark.workload.text import (
-    STOPWORDS,
-    _sql_tokens,
-    _tokens,
-)
+from distributed_mapreduce_spark.workload.text import STOPWORDS
 
 #: Fixed keyword queries (terms from the harness vocabulary).
 BM25_QUERIES: dict[int, tuple[str, ...]] = {
@@ -85,12 +85,12 @@ RRF_QVEC_ID = 0
 
 def _salt(col: Column, tag: str, mod: int) -> Column:
     """md5-derived deterministic salt — portable across engines
-    (canonical hash: `workload/dedup.py:_hash_u32`)."""
-    return _hash_u32(col.cast("string"), tag) % mod
+    (canonical hash: `functions/hashing.py:hash_u32`)."""
+    return hash_u32(col.cast("string"), tag) % mod
 
 
 def _sql_salt(col: str, tag: str, mod: int) -> str:
-    return f"({_sql_hash_u32(f'CAST({col} AS VARCHAR)', tag)} % {mod})"
+    return f"({sql_hash_u32(f'CAST({col} AS VARCHAR)', tag)} % {mod})"
 
 
 def _two_stage_topk(
@@ -152,7 +152,7 @@ def _bm25_relations(
         ],
         "query_id INT, term STRING, gdiv INT",
     )
-    tokd = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    tokd = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     # Adaptive corpus persist (r13, VERDICT r12 #7). ABOVE the byte
     # threshold, ONE doc-grain relation carries everything downstream
     # needs from the corpus — dl plus the per-matched-term counts,
@@ -280,7 +280,7 @@ def _bm25_scored_sql(queries: dict[int, tuple[str, ...]]) -> str:
     )
     return f"""
     q(query_id, term) AS (VALUES {values}),
-    tokd AS MATERIALIZED (SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents),
+    tokd AS MATERIALIZED (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents),
     dl AS MATERIALIZED (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM tokd),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
                    CAST(sum(dl) AS BIGINT) AS total_len FROM dl),
@@ -472,7 +472,6 @@ def q_retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Phrase length for positional phrase match.
 PHRASE_N = 3
 
-from distributed_mapreduce_spark.workload.quality import _sql_ngrams  # noqa: E402
 
 _PHRASE_SQL = """
     WITH tk AS MATERIALIZED (
@@ -511,7 +510,7 @@ _PHRASE_SQL = """
 @query(
     "retrieval_phrase_match",
     oracle=_PHRASE_SQL.format(
-        toks=_sql_tokens("text"), ngrams=_sql_ngrams("toks", PHRASE_N)
+        toks=sql_tokens("text"), ngrams=sql_ngrams("toks", PHRASE_N)
     ),
 )
 def q_retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -535,17 +534,15 @@ def q_retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the shuffled volume is the union of the phrase terms'
     postings (selectivity |postings|/|tokens|), and the tokenizer
     runs once instead of once per term leg."""
-    from distributed_mapreduce_spark.workload.quality import _ngrams
-
     docs = table(spark, sf_dir, "documents")
-    tokd = docs.select("doc_id", _tokens(F.col("text")).alias("__toks"))
+    tokd = docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
     toks = tokd.select(
         "doc_id", F.posexplode(F.col("__toks")).alias("pos", "tok")
     )
-    # token array materialized (tokd) so _ngrams' ~5 references don't
+    # token array materialized (tokd) so ngrams' ~5 references don't
     # each re-run the tokenizer inside its non-codegen HOF lambdas
     grams = tokd.select(
-        F.explode(_ngrams(F.col("__toks"), PHRASE_N)).alias("gram")
+        F.explode(ngrams(F.col("__toks"), PHRASE_N)).alias("gram")
     )
     top = (
         grams.groupBy("gram")
@@ -634,7 +631,7 @@ def _prf_exp_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     query), so the ranking window is a partitioned pass over a
     LIMIT-bounded relation."""
     docs = table(spark, sf_dir, "documents")
-    tokd = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    tokd = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     fb = _two_stage_topk(
         _bm25_scored(spark, sf_dir, BM25_QUERIES),
         ["query_id"],
@@ -811,7 +808,7 @@ def _ql_sql() -> str:
     return f"""
     q(query_id, term) AS (VALUES {values}),
     tokd AS MATERIALIZED (
-      SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents
+      SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
     ),
     dl AS MATERIALIZED (
       SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM tokd
@@ -899,7 +896,7 @@ def _ql_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(qid, t) for qid, ts in sorted(BM25_QUERIES.items()) for t in ts],
         "query_id INT, term STRING",
     )
-    tokd = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    tokd = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     dl = tokd.select("doc_id", F.size("toks").cast("long").alias("dl"))
     tot = dl.agg(F.sum("dl").cast("long").alias("total_len"))
     tf = tokd.select(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import hash_u32, sql_hash_u32
 from distributed_mapreduce_spark.workload.registry import query, table
 
 #: Winsorization clip quantiles.
@@ -1262,7 +1263,7 @@ def _cuped_oracle() -> str:
     return f"""
     WITH per_user AS (
       SELECT user_id,
-             ('0x' || substr(md5('ab_' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
+             {sql_hash_u32('CAST(user_id AS VARCHAR)', 'ab_')}
                  % 2 AS grp,
              CAST(sum(CASE WHEN ts <  TIMESTAMP '{CUPED_CUTOFF}'
                            THEN floor(CAST(value AS DECIMAL(18,2)) * 100)
@@ -1358,15 +1359,7 @@ def q_cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(~pre, cents).otherwise(F.lit(0))).cast("long").alias("y"),
     ).select(
         (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("ab_"), F.col("user_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            hash_u32(F.col("user_id").cast("string"), "ab_")
             % 2
         ).alias("grp"),
         "x",

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import hash_u32, sql_hash_u32
 from distributed_mapreduce_spark.workload.registry import query, table
 
 #: Brute-force query set: vec_id < N_QUERIES.
@@ -196,7 +197,7 @@ def near_dup_pairs_cell_capped(emb: DataFrame, cap: int = EMBED_CELL_CAP) -> Dat
     # exist. Same ceil(count/cap) values, oracle unchanged.
     cell_sizes = emb.groupBy("label").agg(F.count(F.lit(1)).alias("_cn"))
     nsub = ((F.col("_cn") + F.lit(cap - 1)) / F.lit(cap)).cast("long")
-    h = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10).cast("long")
+    h = hash_u32(F.col("vec_id").cast("string"))
     # Per-VECTOR norm, computed once on the n-row relation instead of
     # inside every pair's cosine (3x fewer folds on the O(m²/cells)
     # pair relation). norm() here is the identical double fold the
@@ -250,7 +251,7 @@ def near_dup_pairs_cell_capped(emb: DataFrame, cap: int = EMBED_CELL_CAP) -> Dat
     oracle=f"""
     WITH c AS (
       SELECT vec_id, label, embedding,
-             ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+             {sql_hash_u32('CAST(vec_id AS VARCHAR)')}
                % ((count(*) OVER (PARTITION BY label) + {EMBED_CELL_CAP - 1}) // {EMBED_CELL_CAP}) AS sub
       FROM embeddings
     )
@@ -800,7 +801,7 @@ def q_jl_distance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE c AS (
       SELECT vec_id, label, embedding,
-             ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+             {sql_hash_u32('CAST(vec_id AS VARCHAR)')}
                % ((count(*) OVER (PARTITION BY label) + {EMBED_CELL_CAP - 1}) // {EMBED_CELL_CAP}) AS sub
       FROM embeddings
     ), verified AS (
@@ -1610,7 +1611,7 @@ def q_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH c AS MATERIALIZED (
       SELECT vec_id, label, embedding,
-             ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+             {sql_hash_u32('CAST(vec_id AS VARCHAR)')}
                % ((count(*) OVER (PARTITION BY label) + {EMBED_CELL_CAP - 1}) // {EMBED_CELL_CAP}) AS sub
       FROM embeddings
     ), pairs AS MATERIALIZED (
@@ -1692,11 +1693,10 @@ def q_semdedup_keep_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 QA_BUCKET_U = 25_000
 QA_PER_BUCKET = 2
 
-from distributed_mapreduce_spark.workload.dedup import _sql_hash_u32  # noqa: E402
 
 #: Canonical portable hash for the QA draw — same single-source idiom
 #: as every other oracle (never re-inline first-8-hex-of-md5).
-_QA_HASH_SQL = _sql_hash_u32(
+_QA_HASH_SQL = sql_hash_u32(
     "CAST(vec_a AS VARCHAR) || '_' || CAST(vec_b AS VARCHAR)", "qa"
 )
 
@@ -1706,7 +1706,7 @@ _QA_HASH_SQL = _sql_hash_u32(
     oracle=f"""
     WITH c AS MATERIALIZED (
       SELECT vec_id, label, embedding,
-             ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+             {sql_hash_u32('CAST(vec_id AS VARCHAR)')}
                % ((count(*) OVER (PARTITION BY label) + {EMBED_CELL_CAP - 1}) // {EMBED_CELL_CAP}) AS sub
       FROM embeddings
     ), pairs AS MATERIALIZED (
@@ -1743,14 +1743,13 @@ def q_dedup_qa_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     each cut to {QA_PER_BUCKET} rows). Output is ≤ 40·{QA_PER_BUCKET}
     rows no matter the corpus size."""
     pairs = near_dup_pairs_cell_capped(table(spark, sf_dir, "embeddings"))
-    from distributed_mapreduce_spark.workload.dedup import _hash_u32
 
     strat = pairs.select(
         "vec_a",
         "vec_b",
         "cos_u",
         F.expr(f"cos_u DIV {QA_BUCKET_U}").alias("bucket"),
-        _hash_u32(
+        hash_u32(
             F.concat_ws("_", F.col("vec_a"), F.col("vec_b")), "qa"
         ).alias("h"),
     )

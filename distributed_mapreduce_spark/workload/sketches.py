@@ -27,6 +27,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import (
+    hash_u32,
+    ngrams,
+    sql_hash_u32,
+    sql_ngrams,
+    sql_tokens,
+    tokens,
+)
 from distributed_mapreduce_spark.workload.registry import query, table
 
 #: Filter geometry: 1024 bits as 32 × 32-bit words; 3 hash functions.
@@ -40,19 +48,12 @@ MEMBER_NATION_LT = 5
 
 def _pos(key: Column, j: int) -> Column:
     """j-th bit position of a key: md5-derived uint32 % BLOOM_BITS."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"bl{j}_"), key.cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % BLOOM_BITS
-    )
+    return hash_u32(key.cast("string"), f"bl{j}_") % BLOOM_BITS
 
 
 def _sql_pos(key: str, j: int) -> str:
     return (
-        f"(('0x' || substr(md5('bl{j}_' || CAST({key} AS VARCHAR)), 1, 8))::BIGINT"
+        f"({sql_hash_u32(f'CAST({key} AS VARCHAR)', f'bl{j}_')}"
         f" % {BLOOM_BITS})"
     )
 
@@ -215,22 +216,16 @@ CMS_TOPK = 20
 
 def _cms_bucket(term: Column, j: int) -> Column:
     """Row-j counter index of a term (portable md5-u32 % CMS_W)."""
-    return (
-        F.conv(F.substring(F.md5(F.concat(F.lit(f"cm{j}_"), term)), 1, 8), 16, 10)
-        .cast("long")
-        % CMS_W
-    )
+    return hash_u32(term, f"cm{j}_") % CMS_W
 
 
 def _sql_cms_bucket(expr: str, j: int) -> str:
-    return f"(('0x' || substr(md5('cm{j}_' || {expr}), 1, 8))::BIGINT % {CMS_W})"
+    return f"({sql_hash_u32(expr, f'cm{j}_')} % {CMS_W})"
 
-
-_CMS_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 _CMS_SQL = f"""
     WITH toks AS (
-      SELECT unnest({_CMS_TOKS}) AS term FROM documents
+      SELECT unnest({sql_tokens('text')}) AS term FROM documents
     ), n AS (
       SELECT CAST(count(*) AS BIGINT) AS total FROM toks
     ), exact AS (
@@ -283,7 +278,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     {CMS_W} rows — THE reason one uses a CMS."""
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(F.filter(F.split(F.col("text"), " ", -1), lambda x: x != "")).alias(
+        F.explode(tokens(F.col("text"))).alias(
             "term"
         )
     ).persist()
@@ -517,13 +512,9 @@ _KMV_EST = (
 )
 _SQL_KMV_EST = _KMV_EST.replace(" DIV ", " // ")
 
-from distributed_mapreduce_spark.workload.quality import (  # noqa: E402
-    _sql_ngrams as _kmv_sql_ngrams,
-)
-
 #: The sketched domain: bigram strings of the token stream (see
 #: `_kmv_hashes` for why not unigrams).
-_bigrams_sql = _kmv_sql_ngrams("toks", 2)
+_bigrams_sql = sql_ngrams("toks", 2)
 
 
 def _kmv_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -531,19 +522,16 @@ def _kmv_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     not unigrams — the harness vocabulary is only ~60 words, which
     would leave every sketch in its exact n<K regime; bigram
     cardinality ~700/source actually exercises the estimator)."""
-    from distributed_mapreduce_spark.workload.dedup import _hash_u32, _tokens
-    from distributed_mapreduce_spark.workload.quality import _ngrams
-
     docs = table(spark, sf_dir, "documents")
     return (
-        # token array materialized once per row: _ngrams references it
+        # token array materialized once per row: ngrams references it
         # ~5x inside non-codegen HOF lambdas
-        docs.select("source", _tokens(F.col("text")).alias("__toks"))
+        docs.select("source", tokens(F.col("text")).alias("__toks"))
         .select(
             "source",
-            F.explode(_ngrams(F.col("__toks"), 2)).alias("g"),
+            F.explode(ngrams(F.col("__toks"), 2)).alias("g"),
         )
-        .select("source", _hash_u32(F.col("g"), "kv_").alias("h"))
+        .select("source", hash_u32(F.col("g"), "kv_").alias("h"))
         .distinct()
     )
 
@@ -567,7 +555,7 @@ def _k_smallest(df: DataFrame, part: list[str], k: int) -> DataFrame:
 _SQL_KMV_PER_SOURCE = f"""
     hs AS MATERIALIZED (
       SELECT DISTINCT source,
-             ('0x' || substr(md5('kv_' || tok), 1, 8))::BIGINT AS h
+             {sql_hash_u32('tok', 'kv_')} AS h
       FROM (SELECT source, unnest({_bigrams_sql}) AS tok
             FROM (SELECT source,
                          list_filter(string_split(text, ' '),
@@ -642,7 +630,7 @@ def q_kmv_distinct_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH hs0 AS MATERIALIZED (
       SELECT DISTINCT source,
-             ('0x' || substr(md5('kv_' || tok), 1, 8))::BIGINT AS h
+             {sql_hash_u32('tok', 'kv_')} AS h
       FROM (SELECT source, unnest({_bigrams_sql}) AS tok
             FROM (SELECT source,
                          list_filter(string_split(text, ' '),

@@ -14,6 +14,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import (
+    bp,
+    count_in,
+    hash_u32,
+    sql_bp,
+    sql_count_in,
+    sql_hash_u32,
+    sql_tokens,
+    tokens,
+)
 from distributed_mapreduce_spark.operators.partitioning import global_cumsum
 from distributed_mapreduce_spark.workload.registry import (
     query,
@@ -34,67 +44,35 @@ LANG_MARKERS = {
 }
 
 
-def _tokens(col: Column) -> Column:
-    """Non-empty whitespace tokens of a text column (JVM-side)."""
-    return F.filter(F.split(col, " ", -1), lambda x: x != "")
-
-
-def _sql_tokens(c: str) -> str:
-    return f"list_filter(string_split({c}, ' '), x -> x <> '')"
-
-
-def _count_in(tokens: Column, words: tuple[str, ...]) -> Column:
-    return F.size(F.filter(tokens, lambda x: x.isin(*words)))
-
-
-def _sql_count_in(tokens: str, words: tuple[str, ...]) -> str:
-    lst = ", ".join(f"'{w}'" for w in words)
-    return f"len(list_filter({tokens}, x -> x IN ({lst})))"
-
-
-def _bp(num: Column, den: Column) -> Column:
-    """Exact integer basis points: floor(num*10000/den); 0 if den=0."""
-    return F.when(den == 0, F.lit(0)).otherwise(
-        F.floor(num.cast("double") * 10000.0 / den.cast("double"))
-    ).cast("long")
-
-
-def _sql_bp(num: str, den: str) -> str:
-    return (
-        f"CAST(CASE WHEN ({den}) = 0 THEN 0 "
-        f"ELSE floor(({num}) * 10000.0 / ({den})) END AS BIGINT)"
-    )
-
-
 # ---------------------------------------------------------------------------
 
 
 @query(
     "text_token_count",
     oracle=f"""
-    SELECT doc_id, CAST(len({_sql_tokens('text')}) AS INTEGER) AS n_tokens
+    SELECT doc_id, CAST(len({sql_tokens('text')}) AS INTEGER) AS n_tokens
     FROM documents
     """,
 )
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token count per document."""
     docs = table(spark, sf_dir, "documents")
-    return docs.select("doc_id", F.size(_tokens(F.col("text"))).alias("n_tokens"))
+    return docs.select("doc_id", F.size(tokens(F.col("text"))).alias("n_tokens"))
 
 
 @query(
     "text_quality_score",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, text, {_sql_tokens('text')} AS toks,
+      SELECT doc_id, text, {sql_tokens('text')} AS toks,
              length(text) AS n_chars_m
       FROM documents
     )
     SELECT doc_id,
            CAST(n_chars_m AS BIGINT) AS n_chars_m,
            CAST(len(toks) AS INTEGER) AS n_tokens,
-           {_sql_bp(_sql_count_in('toks', STOPWORDS), 'len(toks)')} AS stopword_bp,
-           {_sql_bp("length(text) - length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))",
+           {sql_bp(sql_count_in('toks', STOPWORDS), 'len(toks)')} AS stopword_bp,
+           {sql_bp("length(text) - length(regexp_replace(text, '[a-z0-9 ]', '', 'g'))",
                     'length(text)')} AS punct_bp
     FROM t
     """,
@@ -104,21 +82,21 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     punctuation ratio (basis points). The standard cheap pre-filters a
     corpus pipeline applies before model training."""
     docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     n_chars = F.length(F.col("text"))
     punct = n_chars - F.length(F.regexp_replace(F.col("text"), "[a-z0-9 ]", ""))
     return docs.select(
         "doc_id",
         n_chars.cast("long").alias("n_chars_m"),
         F.size(toks).alias("n_tokens"),
-        _bp(_count_in(toks, STOPWORDS), F.size(toks)).alias("stopword_bp"),
-        _bp(punct, n_chars).alias("punct_bp"),
+        bp(count_in(toks, STOPWORDS), F.size(toks)).alias("stopword_bp"),
+        bp(punct, n_chars).alias("punct_bp"),
     )
 
 
 def _lang_case_sql() -> str:
-    toks = _sql_tokens("text")
-    scores = {k: _sql_count_in(toks, v) for k, v in LANG_MARKERS.items()}
+    toks = sql_tokens("text")
+    scores = {k: sql_count_in(toks, v) for k, v in LANG_MARKERS.items()}
     en, de, es, fr = scores["en"], scores["de"], scores["es"], scores["fr"]
     return f"""
     CASE
@@ -143,8 +121,8 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language-ID heuristic with a deterministic argmax
     preference order (en > de > es > fr), aggregated to a histogram."""
     docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    s = {k: _count_in(toks, v) for k, v in LANG_MARKERS.items()}
+    toks = tokens(F.col("text"))
+    s = {k: count_in(toks, v) for k, v in LANG_MARKERS.items()}
     pred = (
         F.when((s["en"] == 0) & (s["de"] == 0) & (s["es"] == 0) & (s["fr"] == 0), "unknown")
         .when((s["en"] >= s["de"]) & (s["en"] >= s["es"]) & (s["en"] >= s["fr"]), "en")
@@ -185,7 +163,7 @@ BPE_REGEX = "[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]+"
     oracle=f"""
     SELECT doc_id,
            CAST(len(regexp_extract_all(text, '{BPE_REGEX}')) AS INTEGER) AS n_bpe_tokens,
-           CAST(len({_sql_tokens('text')}) AS INTEGER) AS n_ws_tokens
+           CAST(len({sql_tokens('text')}) AS INTEGER) AS n_ws_tokens
     FROM documents
     """,
 )
@@ -200,7 +178,7 @@ def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_REGEX), F.lit(0))).alias(
             "n_bpe_tokens"
         ),
-        F.size(_tokens(F.col("text"))).alias("n_ws_tokens"),
+        F.size(tokens(F.col("text"))).alias("n_ws_tokens"),
     )
 
 
@@ -216,8 +194,8 @@ ROLLING_MASK = 0xFFFFFFFF
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             list_transform({_sql_tokens('text')},
-                            s -> ('0x' || substr(md5('rh_' || s), 1, 8))::BIGINT) AS th
+             list_transform({sql_tokens('text')},
+                            s -> {sql_hash_u32('s', 'rh_')}) AS th
       FROM documents
     )
     SELECT doc_id,
@@ -235,10 +213,8 @@ def q_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint for chunked dedup."""
     docs = table(spark, sf_dir, "documents")
     th = F.transform(
-        _tokens(F.col("text")),
-        lambda s: F.conv(
-            F.substring(F.md5(F.concat(F.lit("rh_"), s)), 1, 8), 16, 10
-        ).cast("long"),
+        tokens(F.col("text")),
+        lambda s: hash_u32(s, "rh_"),
     )
     fold = F.aggregate(
         th,
@@ -256,11 +232,11 @@ SPLIT_TRAIN_PCT, SPLIT_VAL_PCT = 80, 90
     "text_split_assign",
     oracle=f"""
     SELECT split, count(*) AS n_docs,
-           CAST(sum(len({_sql_tokens('text')})) AS BIGINT) AS n_tokens
+           CAST(sum(len({sql_tokens('text')})) AS BIGINT) AS n_tokens
     FROM (
       SELECT text,
-             CASE WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
-                  WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < {SPLIT_VAL_PCT} THEN 'val'
+             CASE WHEN {sql_hash_u32('CAST(doc_id AS VARCHAR)', 'split_')} % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
+                  WHEN {sql_hash_u32('CAST(doc_id AS VARCHAR)', 'split_')} % 100 < {SPLIT_VAL_PCT} THEN 'val'
                   ELSE 'test' END AS split
       FROM documents
     ) GROUP BY split
@@ -275,11 +251,7 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     per split."""
     docs = table(spark, sf_dir, "documents")
     bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        hash_u32(F.col("doc_id").cast("string"), "split_")
         % 100
     )
     split = (
@@ -288,7 +260,7 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("test")
     )
     return (
-        docs.select(split.alias("split"), F.size(_tokens(F.col("text"))).alias("nt"))
+        docs.select(split.alias("split"), F.size(tokens(F.col("text"))).alias("nt"))
         .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -301,7 +273,7 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_top_terms",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_sql_tokens('text')}) AS tok FROM documents
+      SELECT doc_id, unnest({sql_tokens('text')}) AS tok FROM documents
     ), tf AS (
       SELECT doc_id, tok, count(*) AS tf FROM tok GROUP BY doc_id, tok
     ), df AS (
@@ -328,7 +300,7 @@ def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
-    tok = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
+    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df = tok.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
     w = Window.partitionBy("doc_id").orderBy(
@@ -439,13 +411,13 @@ def build_corpus_prep(docs: DataFrame, with_telemetry: bool = False):
     """
     from pyspark.sql import Observation
 
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     scrubbed = docs.select("doc_id", scrub_pii(F.col("text")).alias("text"))
     scored = scrubbed.select(
         "doc_id",
         "text",
         F.size(toks).alias("n_tokens"),
-        _bp(_count_in(toks, STOPWORDS), F.size(toks)).alias("stop_bp"),
+        bp(count_in(toks, STOPWORDS), F.size(toks)).alias("stop_bp"),
     )
     observations: dict[str, Observation] = {}
     if with_telemetry:
@@ -467,11 +439,7 @@ def build_corpus_prep(docs: DataFrame, with_telemetry: bool = False):
         deduped = deduped.observe(obs_d, F.count(F.lit(1)).alias("rows_unique"))
         observations["dedup_gate"] = obs_d
     bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        hash_u32(F.col("doc_id").cast("string"), "split_")
         % 100
     )
     split = (
@@ -493,8 +461,8 @@ def build_corpus_prep(docs: DataFrame, with_telemetry: bool = False):
       SELECT doc_id, {_sql_scrub('text')} AS text FROM documents
     ), scored AS (
       SELECT doc_id, text,
-             len({_sql_tokens('text')}) AS n_tokens,
-             {_sql_bp(_sql_count_in(_sql_tokens('text'), STOPWORDS), f"len({_sql_tokens('text')})")} AS stop_bp
+             len({sql_tokens('text')}) AS n_tokens,
+             {sql_bp(sql_count_in(sql_tokens('text'), STOPWORDS), f"len({sql_tokens('text')})")} AS stop_bp
       FROM scrubbed
     ), kept AS (
       SELECT doc_id, text FROM scored WHERE n_tokens >= 40 AND stop_bp >= 300
@@ -503,8 +471,8 @@ def build_corpus_prep(docs: DataFrame, with_telemetry: bool = False):
       FROM kept GROUP BY md5(text)
     )
     SELECT split, count(*) AS n_docs FROM (
-      SELECT CASE WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
-                  WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < {SPLIT_VAL_PCT} THEN 'val'
+      SELECT CASE WHEN {sql_hash_u32('CAST(doc_id AS VARCHAR)', 'split_')} % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
+                  WHEN {sql_hash_u32('CAST(doc_id AS VARCHAR)', 'split_')} % 100 < {SPLIT_VAL_PCT} THEN 'val'
                   ELSE 'test' END AS split
       FROM deduped
     ) GROUP BY split
@@ -532,7 +500,7 @@ CHUNK_W, CHUNK_S = 32, 24
     "text_chunking",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_sql_tokens('text')} AS toks FROM documents
+      SELECT doc_id, {sql_tokens('text')} AS toks FROM documents
     )
     SELECT doc_id, CAST(i AS INTEGER) AS chunk_idx,
            array_to_string(toks[i * {CHUNK_S} + 1 : i * {CHUNK_S} + {CHUNK_W}], ' ') AS chunk,
@@ -549,7 +517,7 @@ def q_text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     → explode; chunk count per doc is ceil((len-W)/S)+1 capped by the
     start-in-range rule, mirrored exactly in the oracle."""
     docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     t = docs.select("doc_id", toks.alias("toks"))
     n = F.size("toks")
     starts = F.filter(
@@ -581,7 +549,7 @@ PACK_BUDGET = 512
     "text_packing",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, len({_sql_tokens('text')}) AS n_tokens FROM documents
+      SELECT doc_id, len({sql_tokens('text')}) AS n_tokens FROM documents
     ), cum AS (
       SELECT doc_id, n_tokens,
              sum(n_tokens) OVER (ORDER BY doc_id
@@ -605,7 +573,7 @@ def q_text_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pack boundaries are pure integer arithmetic, so the oracle is
     exact."""
     docs = table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", F.size(_tokens(F.col("text"))).alias("n_tokens"))
+    t = docs.select("doc_id", F.size(tokens(F.col("text"))).alias("n_tokens"))
     cum = global_cumsum(t, [F.col("doc_id")], "n_tokens", cumsum_col="c")
     return (
         cum.select(
@@ -630,7 +598,7 @@ MIX_HEAD_BP, MIX_MID_BP, MIX_TAIL_BP = 10000, 2500, 500
     oracle=f"""
     SELECT source, count(*) AS n_kept, min(doc_id) AS min_doc
     FROM documents
-    WHERE ('0x' || substr(md5('mix_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000
+    WHERE {sql_hash_u32('CAST(doc_id AS VARCHAR)', 'mix_')} % 10000
           < CASE WHEN CAST(substr(source, 4) AS INTEGER) < 5 THEN {MIX_HEAD_BP}
                  WHEN CAST(substr(source, 4) AS INTEGER) < 15 THEN {MIX_MID_BP}
                  ELSE {MIX_TAIL_BP} END
@@ -652,11 +620,7 @@ def q_corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(MIX_TAIL_BP)
     )
     h = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mix_"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        hash_u32(F.col("doc_id").cast("string"), "mix_")
         % 10000
     )
     return (
@@ -670,7 +634,7 @@ def q_corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "packing_efficiency",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, len({_sql_tokens('text')}) AS n_tokens FROM documents
+      SELECT doc_id, len({sql_tokens('text')}) AS n_tokens FROM documents
     ), cum AS (
       SELECT doc_id, n_tokens,
              sum(n_tokens) OVER (ORDER BY doc_id
@@ -700,7 +664,7 @@ def q_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single summary row; the running sum uses the distributed
     `global_cumsum` prefix-sum (no unpartitioned window)."""
     docs = table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", F.size(_tokens(F.col("text"))).alias("n_tokens"))
+    t = docs.select("doc_id", F.size(tokens(F.col("text"))).alias("n_tokens"))
     cum = global_cumsum(t, [F.col("doc_id")], "n_tokens", cumsum_col="c")
     packs = (
         cum.select(
@@ -741,8 +705,8 @@ def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one projection + one hash aggregate; scale-free."""
     docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    s = {k: _count_in(toks, v) for k, v in LANG_MARKERS.items()}
+    toks = tokens(F.col("text"))
+    s = {k: count_in(toks, v) for k, v in LANG_MARKERS.items()}
     pred = (
         F.when(
             (s["en"] == 0) & (s["de"] == 0) & (s["es"] == 0) & (s["fr"] == 0),
@@ -764,7 +728,7 @@ def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "top_terms_by_lang",
     oracle=f"""
     WITH tok AS (
-      SELECT lang, unnest({_sql_tokens('text')}) AS term FROM documents
+      SELECT lang, unnest({sql_tokens('text')}) AS term FROM documents
     ), cnt AS (
       SELECT lang, term, CAST(count(*) AS BIGINT) AS n
       FROM tok GROUP BY 1, 2
@@ -788,7 +752,7 @@ def q_top_terms_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     cnt = (
-        docs.select("lang", F.explode(_tokens(F.col("text"))).alias("term"))
+        docs.select("lang", F.explode(tokens(F.col("text"))).alias("term"))
         .groupBy("lang", "term")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -855,7 +819,7 @@ SIMPSON_GATE_PPM = 900_000
     "text_simpson_diversity",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_sql_tokens('text')}) AS tok FROM documents
+      SELECT doc_id, unnest({sql_tokens('text')}) AS tok FROM documents
     ),
     tf AS (
       SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY doc_id, tok
@@ -898,7 +862,7 @@ def q_text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     diversity statistic used as a quality gate.
     """
     docs = table(spark, sf_dir, "documents")
-    ex = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
+    ex = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     # Input-scaled width for the token exchange (x1000 slope was 1.03
     # at the 32-part default, SCALING_r08): hash by doc_id — a subset
     # of the (doc_id, tok) aggregation keys AND the (doc_id) re-agg
@@ -948,9 +912,9 @@ BLOCK_SCORE_REVIEW = 4
     oracle=f"""
     WITH hits AS (
       SELECT doc_id,
-             {_sql_count_in(_sql_tokens('text'), BLOCK_SEV3)} AS n_sev3,
-             {_sql_count_in(_sql_tokens('text'), BLOCK_SEV2)} AS n_sev2,
-             {_sql_count_in(_sql_tokens('text'), BLOCK_SEV1)} AS n_sev1
+             {sql_count_in(sql_tokens('text'), BLOCK_SEV3)} AS n_sev3,
+             {sql_count_in(sql_tokens('text'), BLOCK_SEV2)} AS n_sev2,
+             {sql_count_in(sql_tokens('text'), BLOCK_SEV1)} AS n_sev1
       FROM documents
     )
     SELECT doc_id,
@@ -986,12 +950,12 @@ def q_text_blocklist_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbs (SURVEY.md section 2.2) to the weighted-verdict form.
     """
     docs = table(spark, sf_dir, "documents")
-    toked = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    toked = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     out = toked.select(
         "doc_id",
-        _count_in(F.col("toks"), BLOCK_SEV3).cast("long").alias("n_sev3"),
-        _count_in(F.col("toks"), BLOCK_SEV2).cast("long").alias("n_sev2"),
-        _count_in(F.col("toks"), BLOCK_SEV1).cast("long").alias("n_sev1"),
+        count_in(F.col("toks"), BLOCK_SEV3).cast("long").alias("n_sev3"),
+        count_in(F.col("toks"), BLOCK_SEV2).cast("long").alias("n_sev2"),
+        count_in(F.col("toks"), BLOCK_SEV1).cast("long").alias("n_sev1"),
     )
     score = (3 * F.col("n_sev3") + 2 * F.col("n_sev2") + F.col("n_sev1")).cast(
         "long"
@@ -1022,11 +986,11 @@ def q_text_blocklist_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT d.doc_id, u.gram
       FROM (SELECT doc_id,
                    list_distinct(list_transform(
-                     CASE WHEN len({_sql_tokens('text')}) >= 3
-                          THEN list_transform(range(0, len({_sql_tokens('text')}) - 2),
-                               i -> array_to_string(({_sql_tokens('text')})[i + 1 : i + 3], ' '))
+                     CASE WHEN len({sql_tokens('text')}) >= 3
+                          THEN list_transform(range(0, len({sql_tokens('text')}) - 2),
+                               i -> array_to_string(({sql_tokens('text')})[i + 1 : i + 3], ' '))
                           ELSE [] END,
-                     s -> ('0x' || substr(md5('mh_' || s), 1, 8))::BIGINT)) AS bh
+                     s -> {sql_hash_u32('s', 'mh_')})) AS bh
             FROM documents) d, unnest(d.bh) AS u(gram)
     ),
     mx AS (SELECT max(doc_id) AS mx FROM documents),

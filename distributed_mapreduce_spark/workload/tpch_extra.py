@@ -23,21 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import revenue, sql_revenue
 from distributed_mapreduce_spark.workload.registry import query, table
 
 _DEC = "decimal(18,2)"
-
-_SQL_REVENUE = (
-    "CAST(l_extendedprice AS DECIMAL(18,2))"
-    " * (1 - CAST(l_discount AS DECIMAL(18,2)))"
-)
-
-
-def _revenue() -> F.Column:
-    price = F.col("l_extendedprice").cast(_DEC)
-    disc = F.col("l_discount").cast(_DEC)
-    return price * (F.lit(1).cast(_DEC) - disc)
-
 
 @query(
     "tpch_q6_forecast_revenue",
@@ -85,7 +74,7 @@ def q_tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n1.n_name AS supp_nation,
            n2.n_name AS cust_nation,
            CAST(year(l_shipdate) AS INT) AS l_year,
-           CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS revenue
+           CAST(sum({sql_revenue()}) AS DECIMAL(30,4)) AS revenue
     FROM lineitem
     JOIN supplier ON s_suppkey = l_suppkey
     JOIN orders ON o_orderkey = l_orderkey
@@ -138,7 +127,7 @@ def q_tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year("l_shipdate").cast("int").alias("l_year"),
         )
-        .agg(F.sum(_revenue()).cast("decimal(30,4)").alias("revenue"))
+        .agg(F.sum(revenue()).cast("decimal(30,4)").alias("revenue"))
     )
 
 
@@ -147,8 +136,8 @@ def q_tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT CAST(year(o_orderdate) AS INT) AS o_year,
            CAST(sum(CASE WHEN n2.n_name = 'NATION_3'
-                         THEN {_SQL_REVENUE} ELSE 0 END) AS DOUBLE)
-             / CAST(sum({_SQL_REVENUE}) AS DOUBLE) AS mkt_share
+                         THEN {sql_revenue()} ELSE 0 END) AS DOUBLE)
+             / CAST(sum({sql_revenue()}) AS DOUBLE) AS mkt_share
     FROM lineitem
     JOIN orders ON o_orderkey = l_orderkey
     JOIN customer ON c_custkey = o_custkey
@@ -183,7 +172,7 @@ def q_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2 = nation.select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("supp_nation")
     )
-    rev = _revenue()
+    rev = revenue()
     return (
         li.join(part, F.col("p_partkey") == F.col("l_partkey"))
         .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
@@ -213,7 +202,7 @@ def q_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT n_name AS nation,
            CAST(year(o_orderdate) AS INT) AS o_year,
-           CAST(sum({_SQL_REVENUE}
+           CAST(sum({sql_revenue()}
                     - CAST(p_retailprice AS DECIMAL(18,2))
                       * CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(30,4))
              AS profit
@@ -244,7 +233,7 @@ def q_tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", F.col("n_name").alias("nation")
     )
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    amount = _revenue() - F.col("p_retailprice").cast(_DEC) * F.col(
+    amount = revenue() - F.col("p_retailprice").cast(_DEC) * F.col(
         "l_quantity"
     ).cast(_DEC)
     return (
@@ -262,7 +251,7 @@ def q_tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH pv AS (
       SELECT l_partkey,
-             CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS part_value
+             CAST(sum({sql_revenue()}) AS DECIMAL(30,4)) AS part_value
       FROM lineitem GROUP BY l_partkey
     ), tot AS (
       SELECT CAST(sum(part_value) AS DECIMAL(38,4)) AS total_value,
@@ -285,7 +274,7 @@ def q_tpch_q11_key_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate attached via broadcast cross join — never a global
     window over raw rows."""
     li = table(spark, sf_dir, "lineitem")
-    rev = _revenue()
+    rev = revenue()
     pv = (
         li.groupBy("l_partkey")
         .agg(F.sum(rev).cast("decimal(30,4)").alias("part_value"))
@@ -383,7 +372,7 @@ def q_tpch_q13_order_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
-             CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS total_revenue
+             CAST(sum({sql_revenue()}) AS DECIMAL(30,4)) AS total_revenue
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         AND l_shipdate < TIMESTAMP '1996-04-01'
@@ -407,14 +396,14 @@ def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    revenue = (
+    by_supplier = (
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(_revenue()).cast("decimal(30,4)").alias("total_revenue"))
+        .agg(F.sum(revenue()).cast("decimal(30,4)").alias("total_revenue"))
     )
-    m = revenue.agg(F.max("total_revenue").alias("max_revenue"))
+    m = by_supplier.agg(F.max("total_revenue").alias("max_revenue"))
     supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
-        revenue.crossJoin(F.broadcast(m))
+        by_supplier.crossJoin(F.broadcast(m))
         .filter(F.col("total_revenue") == F.col("max_revenue"))
         .join(F.broadcast(supp), F.col("s_suppkey") == F.col("supplier_no"))
         .select("s_suppkey", "s_name", "total_revenue")
@@ -700,7 +689,7 @@ def q_tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH li AS (
       SELECT CAST(o.o_orderdate AS DATE) AS d0,
              CAST(l.l_shipdate AS DATE) AS d1,
-             CAST(floor({_SQL_REVENUE} * 100) AS BIGINT) AS cents
+             CAST(floor({sql_revenue()} * 100) AS BIGINT) AS cents
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     ), iv AS (
       SELECT d0, cents,

@@ -22,6 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import (
+    hash_u32,
+    sql_hash_u32,
+    sql_tokens,
+    tokens,
+)
 from distributed_mapreduce_spark.workload.registry import query, table
 
 YOY_YEAR_A = 1996
@@ -611,14 +617,14 @@ def q_dq_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dp_noisy_counts",
-    oracle="""
+    oracle=f"""
     WITH g AS MATERIALIZED (
       SELECT source, lang, CAST(count(*) AS BIGINT) AS true_n
       FROM documents GROUP BY 1, 2
     ), h AS (
       SELECT source, lang, true_n,
-             ('0x' || substr(md5('dpA_' || source || '|' || lang), 1, 8))::BIGINT AS h1,
-             ('0x' || substr(md5('dpB_' || source || '|' || lang), 1, 8))::BIGINT AS h2
+             {sql_hash_u32("source || '|' || lang", 'dpA_')} AS h1,
+             {sql_hash_u32("source || '|' || lang", 'dpB_')} AS h2
       FROM g
     )
     SELECT source, lang, true_n,
@@ -658,9 +664,7 @@ def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = F.concat(F.col("source"), F.lit("|"), F.col("lang"))
 
     def geom(tag: str) -> F.Column:
-        h = F.conv(
-            F.substring(F.md5(F.concat(F.lit(tag), key)), 1, 8), 16, 10
-        ).cast("long")
+        h = hash_u32(key, tag)
         return F.bit_count(h.bitwiseXOR(h + 1)) - 1
 
     noise = (geom("dpA_") - geom("dpB_")).cast("long")
@@ -731,8 +735,6 @@ def q_subsample_variance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps replicas exchangeable; the audit pins the full-data mean
     beside the replica grand mean (they agree to within the replica
     spread — tests assert the sandwich)."""
-    from distributed_mapreduce_spark.workload.dedup import _hash_u32
-
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     memb = F.filter(
         F.array(
@@ -740,7 +742,7 @@ def q_subsample_variance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(
                     F.lit(b).alias("b"),
                     (
-                        _hash_u32(F.col("doc_id").cast("string"), f"bs{b}_") % 2
+                        hash_u32(F.col("doc_id").cast("string"), f"bs{b}_") % 2
                     ).alias("r"),
                 )
                 for b in range(SUBSAMPLE_B)
@@ -821,7 +823,7 @@ RTBF_TERMS = ("spark", "join", "hash", "window", "vector", "scan")
       SELECT doc_id, tok FROM (
         SELECT doc_id,
                unnest(list_intersect(
-                 list_filter(string_split(text, ' '), x -> x <> ''),
+                 {sql_tokens('text')},
                  [{", ".join(f"'{t}'" for t in RTBF_TERMS)}])) AS tok
         FROM documents)
     ), grp_stats AS (
@@ -906,14 +908,13 @@ def q_governance_deletion_propagation(
         .cast("long")
         .alias("keepers_reassigned"),
     )
-    from distributed_mapreduce_spark.workload.text import _tokens
 
     post = docs.select(
         "doc_id",
         is_del.alias("d"),
         F.explode(
             F.array_intersect(
-                _tokens(F.col("text")), F.array(*[F.lit(t) for t in RTBF_TERMS])
+                tokens(F.col("text")), F.array(*[F.lit(t) for t in RTBF_TERMS])
             )
         ).alias("tok"),
     )

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import hash_u32, sql_hash_u32
 from distributed_mapreduce_spark.workload.registry import query, table
 
 #: Deterministic version-history gates (see module docstring).
@@ -152,10 +153,10 @@ def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cdc_apply_patch",
     oracle=f"""
     SELECT CAST(count(*) AS BIGINT) AS n_patched,
-           CAST(sum(('0x' || substr(md5({_ENC_SQL}), 1, 8))::BIGINT) AS BIGINT)
+           CAST(sum({sql_hash_u32(_ENC_SQL)}) AS BIGINT)
              AS checksum_patched,
            CAST(count(*) AS BIGINT) AS n_v2,
-           CAST(sum(('0x' || substr(md5({_ENC_SQL}), 1, 8))::BIGINT) AS BIGINT)
+           CAST(sum({sql_hash_u32(_ENC_SQL)}) AS BIGINT)
              AS checksum_v2,
            true AS consistent
     FROM orders
@@ -192,7 +193,7 @@ def q_cdc_apply_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
     patched = v1.join(touched, "o_orderkey", "left_anti").unionAll(new_images)
 
     def cksum(df: DataFrame, n_name: str, c_name: str) -> DataFrame:
-        h = F.conv(F.substring(F.md5(_ENC_SPARK()), 1, 8), 16, 10).cast("long")
+        h = hash_u32(_ENC_SPARK())
         return df.agg(
             F.count(F.lit(1)).cast("long").alias(n_name),
             F.sum(h).cast("long").alias(c_name),
@@ -215,7 +216,7 @@ def q_cdc_apply_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "partition_merkle_checksums",
     oracle=f"""
-    SELECT CAST(('0x' || substr(md5('mk_' || CAST(l_orderkey AS VARCHAR)), 1, 8))::BIGINT
+    SELECT CAST({sql_hash_u32('CAST(l_orderkey AS VARCHAR)', 'mk_')}
                 % {MERKLE_BUCKETS} AS INTEGER) AS bucket,
            CAST(count(*) AS BIGINT) AS n_rows,
            CAST(sum(('0x' || substr(md5(
@@ -237,11 +238,7 @@ def q_partition_merkle_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregate at any scale."""
     li = table(spark, sf_dir, "lineitem")
     bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mk_"), F.col("l_orderkey").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        hash_u32(F.col("l_orderkey").cast("string"), "mk_")
         % MERKLE_BUCKETS
     ).cast("int")
     enc = F.concat_ws(
@@ -251,7 +248,7 @@ def q_partition_merkle_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").cast("string"),
         F.col("l_returnflag"),
     )
-    h = F.conv(F.substring(F.md5(enc), 1, 8), 16, 10).cast("long")
+    h = hash_u32(enc)
     return (
         li.select(bucket.alias("bucket"), h.alias("h"))
         .groupBy("bucket")
@@ -270,7 +267,7 @@ COMPACT_TARGET_ROWS = 12000
     "compaction_plan",
     oracle=f"""
     WITH buckets AS (
-      SELECT CAST(('0x' || substr(md5('mk_' || CAST(l_orderkey AS VARCHAR)), 1, 8))::BIGINT
+      SELECT CAST({sql_hash_u32('CAST(l_orderkey AS VARCHAR)', 'mk_')}
                   % {MERKLE_BUCKETS} AS INTEGER) AS bucket,
              CAST(count(*) AS BIGINT) AS n_rows
       FROM lineitem GROUP BY 1
@@ -307,13 +304,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = table(spark, sf_dir, "lineitem")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("mk_"), F.col("l_orderkey").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
+        hash_u32(F.col("l_orderkey").cast("string"), "mk_")
         % MERKLE_BUCKETS
     ).cast("int")
     inv = (
@@ -364,15 +355,15 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT
       (SELECT CAST(count(*) AS BIGINT) FROM state_t) AS n_at_t,
-      (SELECT CAST(sum(('0x' || substr(md5({_ENC_SQL}), 1, 8))::BIGINT)
+      (SELECT CAST(sum({sql_hash_u32(_ENC_SQL)})
               AS BIGINT) FROM state_t) AS checksum_at_t,
       (SELECT CAST(count(*) AS BIGINT) FROM d WHERE k % 2 = 0) AS n_batch1,
       (SELECT CAST(count(*) AS BIGINT) FROM d WHERE k % 2 <> 0) AS n_batch2,
       (SELECT CAST(count(*) AS BIGINT) FROM final)
         = (SELECT CAST(count(*) AS BIGINT) FROM v2)
-      AND (SELECT CAST(sum(('0x' || substr(md5({_ENC_SQL}), 1, 8))::BIGINT)
+      AND (SELECT CAST(sum({sql_hash_u32(_ENC_SQL)})
                   AS BIGINT) FROM final)
-        = (SELECT CAST(sum(('0x' || substr(md5({_ENC_SQL}), 1, 8))::BIGINT)
+        = (SELECT CAST(sum({sql_hash_u32(_ENC_SQL)})
                   AS BIGINT) FROM v2) AS consistent
     """,
 )
@@ -452,7 +443,7 @@ def q_cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     final_enc = F.when(F.col("change").isNull(), e1).when(ins_upd, e2)
 
     def h(enc_col):
-        return F.conv(F.substring(F.md5(enc_col), 1, 8), 16, 10).cast("long")
+        return hash_u32(enc_col)
 
     rows = per_key.withColumn("change", change).select(
         state_enc.alias("s"),

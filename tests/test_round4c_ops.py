@@ -10,6 +10,7 @@ import decimal
 
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import tokens
 from distributed_mapreduce_spark.workload.events import (
     q_events_time_weighted_value,
 )
@@ -91,11 +92,10 @@ def test_pmi_lift_matches_bruteforce_for_one_pair(spark, sf_dir):
     from distributed_mapreduce_spark.workload.corpus import (
         q_collocation_pmi_lift,
     )
-    from distributed_mapreduce_spark.workload.text import _tokens
 
     docs = table(spark, sf_dir, "documents")
     tok_lists = [
-        r["toks"] for r in docs.select(_tokens(F.col("text")).alias("toks")).collect()
+        r["toks"] for r in docs.select(tokens(F.col("text")).alias("toks")).collect()
     ]
     uni: dict[str, int] = {}
     bi: dict[tuple, int] = {}

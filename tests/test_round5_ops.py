@@ -13,6 +13,7 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import tokens
 from distributed_mapreduce_spark.workload.events import (
     INTERP_HOUR_US,
     q_events_gap_fill_interpolate,
@@ -32,7 +33,6 @@ from distributed_mapreduce_spark.workload.retrieval import (
     q_bm25_top_docs,
     q_retrieval_rrf_fusion,
 )
-from distributed_mapreduce_spark.workload.text import _tokens
 
 
 def _bm25_bruteforce(docs_tokens: dict[int, list[str]], terms: tuple[str, ...]):
@@ -60,7 +60,7 @@ def test_bm25_matches_bruteforce(spark, sf_dir):
     toks = {
         r["doc_id"]: list(r["toks"])
         for r in docs.select(
-            "doc_id", _tokens(F.col("text")).alias("toks")
+            "doc_id", tokens(F.col("text")).alias("toks")
         ).collect()
     }
     got = defaultdict(dict)
@@ -83,7 +83,7 @@ def test_bm25_rare_term_outscores_common(spark, sf_dir):
     toks = {
         r["doc_id"]: list(r["toks"])
         for r in docs.select(
-            "doc_id", _tokens(F.col("text")).alias("toks")
+            "doc_id", tokens(F.col("text")).alias("toks")
         ).collect()
     }
     n_docs = len(toks)
@@ -393,7 +393,7 @@ def test_coverage_greedy_matches_bruteforce(spark, sf_dir):
     )
 
     docs = table(spark, sf_dir, "documents")
-    rows = docs.select("source", _tokens(F.col("text")).alias("toks")).collect()
+    rows = docs.select("source", tokens(F.col("text")).alias("toks")).collect()
     by_src = defaultdict(set)
     for r in rows:
         ts = list(r["toks"])

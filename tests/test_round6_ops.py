@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import tokens
 from distributed_mapreduce_spark.workload import QUERIES
 from distributed_mapreduce_spark.workload.registry import table
 
@@ -72,11 +73,10 @@ def test_range_search_is_exactly_the_thresholded_bruteforce(spark, sf_dir):
 def test_lm_fluency_is_bounded_and_covers_multi_token_docs(spark, sf_dir):
     df = QUERIES["quality_lm_fluency"](spark, sf_dir)
     assert df.filter("fluency_bp < 0 OR fluency_bp > 10000").count() == 0
-    from distributed_mapreduce_spark.workload.text import _tokens
 
     n_multi = (
         table(spark, sf_dir, "documents")
-        .filter(F.size(_tokens(F.col("text"))) >= 2)
+        .filter(F.size(tokens(F.col("text"))) >= 2)
         .count()
     )
     assert df.count() == n_multi

@@ -7,6 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.functions import hash_u32, tokens
 from distributed_mapreduce_spark.workload import QUERIES
 
 
@@ -1105,23 +1106,18 @@ def test_winnowing_guarantee_and_density(spark, sf_dir):
     the token stream at fp_pos), (b) coverage — consecutive selected
     positions are less than K+W apart (no unfingerprinted window), and
     (c) per-doc density is bounded by the gram count."""
-    from distributed_mapreduce_spark.workload.dedup import (
-        WINNOW_K,
-        WINNOW_W,
-        _hash_u32,
-        _tokens,
-    )
+    from distributed_mapreduce_spark.workload.dedup import WINNOW_K, WINNOW_W
     from distributed_mapreduce_spark.workload.registry import table
 
     fps = QUERIES["dedup_winnowing_fingerprints"](spark, sf_dir)
     docs = table(spark, sf_dir, "documents").select(
-        "doc_id", _tokens(F.col("text")).alias("toks")
+        "doc_id", tokens(F.col("text")).alias("toks")
     )
     # (a) re-derive the gram hash at each selected position and compare.
     rejoined = fps.join(docs, "doc_id").select(
         "doc_id",
         "fp_pos",
-        (F.col("fp_hash") == _hash_u32(
+        (F.col("fp_hash") == hash_u32(
             F.array_join(F.slice(F.col("toks"), F.col("fp_pos").cast("int"), WINNOW_K), " "),
             "wn_",
         )).alias("ok"),

@@ -9,6 +9,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from distributed_mapreduce_spark.functions import sql_bp, sql_count_in, sql_tokens
 from distributed_mapreduce_spark.workload import ORACLES, QUERIES
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -45,10 +46,7 @@ def test_corpus_prep_telemetry_matches_oracle_case_sums(spark, sf_dir):
     from distributed_mapreduce_spark.workload.registry import table
     from distributed_mapreduce_spark.workload.text import (
         STOPWORDS,
-        _sql_bp,
-        _sql_count_in,
         _sql_scrub,
-        _sql_tokens,
         build_corpus_prep,
     )
 
@@ -66,8 +64,8 @@ def test_corpus_prep_telemetry_matches_oracle_case_sums(spark, sf_dir):
         WITH scrubbed AS (
           SELECT doc_id, {_sql_scrub('text')} AS text FROM documents
         ), scored AS (
-          SELECT doc_id, text, len({_sql_tokens('text')}) AS n_tokens,
-                 {_sql_bp(_sql_count_in(_sql_tokens('text'), STOPWORDS), f"len({_sql_tokens('text')})")} AS stop_bp
+          SELECT doc_id, text, len({sql_tokens('text')}) AS n_tokens,
+                 {sql_bp(sql_count_in(sql_tokens('text'), STOPWORDS), f"len({sql_tokens('text')})")} AS stop_bp
           FROM scrubbed
         )
         SELECT count(*) AS rows_in,

@@ -1,14 +1,19 @@
-"""Dump each query's `.explain("formatted")` physical plan to a directory.
+"""Dump each query's `.explain("formatted")` physical plan and its
+oracle SQL to a directory.
 
 Usage: python tools/dump_plans.py <out_dir> [query ...]
 
 Writes <out_dir>/<query>.txt for each named query (default: every
-registered query, in registration order). Session-global counters are
-stripped: expression IDs (`#123`), exchange plan ids (`plan_id=45`), RDD
-ids (`MapPartitionsRDD[67]`) and lambda-variable suffixes (`lambda x_89`). Two dumps of the same code then diff
+registered query, in registration order): the normalized plan, then the
+query's DuckDB oracle SQL verbatim, so one `diff -r` proves both plan
+and oracle identity. Session-global counters are stripped: expression
+IDs (`#123`), exchange plan ids (`plan_id=45`), RDD ids
+(`MapPartitionsRDD[67]`), lambda-variable suffixes (`lambda x_89`) and
+the random suffix `tempfile.mkdtemp` appends to a prefix
+(`/tmp/bucketed_q_k3j9x2ab/`). Two dumps of the same code then diff
 cleanly and two dumps taken at different commits differ only where a
-plan changed, up to what a run cannot fix: temp-directory names and the
-order in which AQE numbers query stages it materialized at build time.
+plan or an oracle changed, up to what a run cannot fix: the order in
+which AQE numbers query stages it materialized at build time.
 
     python tools/dump_plans.py /tmp/plans_a     # at commit A
     python tools/dump_plans.py /tmp/plans_b     # at commit B
@@ -24,21 +29,29 @@ from __future__ import annotations
 import os
 import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _COUNTERS = re.compile(r"#\d+|(?<=plan_id=)\d+|(?<=RDD\[)\d+(?=\])")
-_LAMBDA_VAR = re.compile(r"(lambda \w+?)_\d+\b")
+#: `lambda x_89` or, with a BIGINT type suffix, `lambda x_89L`.
+_LAMBDA_VAR = re.compile(r"(lambda \w+?)_\d+(?=L?\b)")
+#: `tempfile.mkdtemp(prefix=p)` names a directory `p` + 8 characters
+#: from [a-z0-9_] under the temp root; the prefixes in use end in `_`.
+_MKDTEMP = re.compile(
+    "(" + re.escape(tempfile.gettempdir()) + r"/[\w.-]*?_)[a-z0-9_]{8}(?![\w.-])"
+)
 
 
 def normalize(plan: str) -> str:
-    """The plan text with session-global counters stripped."""
-    return _LAMBDA_VAR.sub(r"\1", _COUNTERS.sub("", plan))
+    """The plan text with session-global counters and temp-dir suffixes
+    stripped."""
+    return _MKDTEMP.sub(r"\1", _LAMBDA_VAR.sub(r"\1", _COUNTERS.sub("", plan)))
 
 
 def main() -> int:
     if len(sys.argv) < 2 or sys.argv[1].startswith("-"):
-        print(__doc__.strip().splitlines()[2], file=sys.stderr)
+        print(__doc__.strip().splitlines()[3], file=sys.stderr)
         return 2
     out_dir, only = sys.argv[1], sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
@@ -48,7 +61,7 @@ def main() -> int:
 
     from distributed_mapreduce_spark.plans import explain_str
     from distributed_mapreduce_spark.session import get_spark
-    from distributed_mapreduce_spark.workload import QUERIES
+    from distributed_mapreduce_spark.workload import ORACLES, QUERIES
 
     unknown = [n for n in only if n not in QUERIES]
     if unknown:
@@ -69,6 +82,8 @@ def main() -> int:
         with open(path, "w") as f:
             f.write(f"== {name} @ {sf_dir} ==\n\n")
             f.write(normalize(plan))
+            f.write(f"\n\n== {name} oracle ==\n\n")
+            f.write(ORACLES.get(name, "(no oracle)"))
             f.write("\n")
         print(f"wrote {path}", flush=True)
     return 0
