@@ -10,14 +10,53 @@ concerns in Spark (HDFS/object store) — no engine code, by design.
 Datasets are immutable once put (the reference's files are too), so
 reads need no locking; the reference's reader-writer scheduling
 (fileserver.py:843-851) has no equivalent here.
+
+What `put` stores: a local parquet file or parquet directory is stored
+as its own bytes — the reference's `put` is an scp of the file — copied
+into a dot-prefixed staging directory in the warehouse and renamed into
+place, every file keeping (or gaining) its ``.parquet`` suffix. Its
+schema is checked first, so a file Spark cannot read fails at `put`,
+not at `get`. CSV, text and DataFrame sources are written by Spark as
+parquet. `get` and the parquet check read through
+`sources.readers.scan_parquet`, which infers each unchanged dataset's
+schema only once.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from distributed_mapreduce_spark.sources.readers import scan_parquet
+
+
+def _spark_hidden(name: str) -> bool:
+    """Spark's file listing skips these names (``_SUCCESS``, ``.crc``
+    files, ``_temporary``) but keeps ``_``-prefixed partition dirs."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _parquet_name(f: str) -> str:
+    return f if f.endswith(".parquet") else f + ".parquet"
+
+
+def _copy_parquet(source: str, dest: str) -> None:
+    """Copy a parquet file, or the files Spark reads under a parquet
+    directory tree, into the new directory ``dest``."""
+    if not os.path.isdir(source):
+        os.mkdir(dest)
+        shutil.copyfile(source, os.path.join(dest, _parquet_name(os.path.basename(source))))
+        return
+    for root, dirs, files in os.walk(source):
+        dirs[:] = [d for d in dirs if not _spark_hidden(d)]
+        out = os.path.join(dest, os.path.relpath(root, source))
+        os.makedirs(out, exist_ok=True)
+        for f in files:
+            if not _spark_hidden(f):
+                shutil.copyfile(os.path.join(root, f), os.path.join(out, _parquet_name(f)))
 
 
 class Catalog:
@@ -43,7 +82,12 @@ class Catalog:
     def put(self, source: str | DataFrame, name: str, fmt: str = "infer") -> None:
         """Ingest a local file (csv/parquet/text lines) or a DataFrame
         as a named dataset. CSV ingests with header + all-string schema
-        (the reference's untyped line model, SURVEY.md §1.2)."""
+        (the reference's untyped line model, SURVEY.md §1.2).
+
+        A local parquet file or directory is stored as its bytes, with
+        no Spark job beyond the (memoized) schema check; a parquet glob
+        or URI is decoded and re-written by Spark."""
+        dest = self._path(name)
         if isinstance(source, DataFrame):
             df = source
         else:
@@ -54,15 +98,32 @@ class Catalog:
             if fmt == "csv":
                 df = self.spark.read.option("header", True).csv(source)
             elif fmt == "parquet":
-                df = self.spark.read.parquet(source)
+                df = scan_parquet(self.spark, source)  # raises if unreadable
+                if os.path.exists(source):
+                    self._put_files(source, dest)
+                    return
             else:
                 df = self.spark.read.text(source)
-        df.write.mode("overwrite").parquet(self._path(name))
+        df.write.mode("overwrite").parquet(dest)
+
+    def _put_files(self, source: str, dest: str) -> None:
+        """Copy into a dot-prefixed staging dir (invisible to `store`),
+        then rename into place; a replaced dataset leaves through the
+        same staging dir."""
+        staging = tempfile.mkdtemp(prefix=f".put_{os.path.basename(dest)}_", dir=self.warehouse)
+        try:
+            data = os.path.join(staging, "data")
+            _copy_parquet(source, data)
+            if os.path.isdir(dest):
+                os.rename(dest, os.path.join(staging, "old"))
+            os.rename(data, dest)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
 
     # -- get: materialize a named dataset (REPL `get`, fileserver.py:1244-1246)
 
     def get(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(name))
+        return scan_parquet(self.spark, self._path(name))
 
     def get_to_local(self, name: str, local_path: str) -> None:
         """Export to one local CSV file (the reference's get writes one
@@ -151,7 +212,7 @@ class Catalog:
         """All dataset names (REPL `store`, fileserver.py:1259-1264)."""
         return sorted(
             d for d in os.listdir(self.warehouse)
-            if os.path.isdir(os.path.join(self.warehouse, d))
+            if not d.startswith(".") and os.path.isdir(os.path.join(self.warehouse, d))
         )
 
     def filetable(self) -> dict[str, dict]:

@@ -119,11 +119,18 @@ class Engine:
 
     def grep(self, path_glob: str, regex: str, mode: str = "a") -> DataFrame:
         """`a`: matching lines; `c`: global count; `m`: count per file
-        (machine), using the input file name as the machine id."""
+        (machine), using the input file name as the machine id.
+
+        The machine is the scan's `_metadata.file_name`, a deterministic
+        column, so Catalyst pushes the regex filter below the projection
+        and only matched lines carry a name (`input_file_name()` is
+        nondeterministic and pinned the filter above it). The name is
+        the URI-encoded last path segment, as `input_file_name()` gave:
+        ``vm 1.log`` reads ``vm%201.log``."""
         from pyspark.sql import functions as F
 
         lines = self.spark.read.text(path_glob).withColumn(
-            "machine", F.element_at(F.split(F.input_file_name(), "/"), -1)
+            "machine", F.col("_metadata.file_name")
         )
         matched = grep_filter(lines, regex, "value")
         if mode == "a":

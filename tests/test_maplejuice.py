@@ -105,6 +105,78 @@ def test_engine_grep_modes(spark, tmp_path):
     assert eng.grep(glob, "^err", "a").count() == 3
 
 
+def test_engine_grep_modes_file_names_with_space(spark, tmp_path):
+    # The machine id is the URI-encoded file name, as
+    # input_file_name() gave it: "vm 1.log" reads "vm%201.log".
+    logs = tmp_path / "my logs"
+    logs.mkdir()
+    (logs / "vm 1.log").write_text("err x\nok\nerr y\n")
+    (logs / "vm 2.log").write_text("ok\nerr z\n")
+    eng = Engine(spark, str(tmp_path / "wh"))
+    glob = str(logs / "*.log")
+    assert eng.grep(glob, "^err", "c").collect()[0]["cnt"] == 3
+    per = {r["machine"]: r["cnt"] for r in eng.grep(glob, "^err", "m").collect()}
+    assert per == {"vm%201.log": 2, "vm%202.log": 1}
+    matched = sorted(tuple(r) for r in eng.grep(glob, "^err", "a").collect())
+    assert matched == [
+        ("vm%201.log", "err x"), ("vm%201.log", "err y"), ("vm%202.log", "err z"),
+    ]
+
+
+def test_parquet_put_stores_the_source_bytes(spark, tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src_file = str(tmp_path / "src.parquet")
+    pq.write_table(pa.table({"k": [1, 2, 3], "v": ["a", None, "c"]}), src_file)
+    src_dir = str(tmp_path / "src_dir")
+    spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]).repartition(2).write.parquet(src_dir)
+    eng = Engine(spark, str(tmp_path / "wh"))
+    for name, src in (("from_file", src_file), ("from_dir", src_dir)):
+        eng.put(src, name, "parquet")
+        want = spark.read.parquet(src)
+        got = eng.get(name)
+        assert got.schema == want.schema
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+        stored = os.listdir(eng.ls(name)["path"])
+        assert stored and all(f.endswith(".parquet") for f in stored)
+    with open(src_file, "rb") as f, open(f"{eng.ls('from_file')['path']}/src.parquet", "rb") as g:
+        assert f.read() == g.read()
+    assert eng.store() == ["from_dir", "from_file"]
+
+
+def test_nanos_parquet_put_raises_at_put(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "nanos.parquet")
+    ts = pa.array([1_000_000_123], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), src)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    eng = Engine(spark, str(tmp_path / "wh"))
+    try:
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            eng.put(src, "nanos")
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    assert eng.store() == []
+
+
+def test_store_ignores_leftover_staging_dir(spark, tmp_path):
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.put(spark.createDataFrame([(1,)], ["k"]), "t")
+    (tmp_path / "wh" / ".put_t_abc123" / "data").mkdir(parents=True)
+    assert eng.store() == ["t"]
+    assert set(eng.filetable()) == {"t"}
+
+
 def test_sink_merged_csv_single_file_roundtrip(spark, tmp_path):
     """conglomerate parity: exactly ONE csv part file, content intact."""
     import glob
